@@ -343,9 +343,9 @@ Secondary (beyond the clean-scaling core count; hardware ceiling {hw[32]/hw[8]:.
 | {n_queries}-query WAND batch (s) | {r8["query_s"]} | {r32["query_s"]} | {r32["qps"]/r8["qps"]:.2f}x |
 
 The 8→32 build row varies wildly across sessions (0.79x-2.14x; 30.1s vs
-273s for identical 300k/32 runs hours apart). A per-stage probe
-(`scripts/probe_width_build.py`, store-lineage stage timers) pins the
-entire variance to the ONE Python-worker stage: in a degraded window
+273s for identical 300k/32 runs hours apart). The store-lineage
+stage timers (`lineage/build.json` stage_seconds) pin the entire
+variance to the ONE Python-worker stage: in a degraded window
 (pure-CPU canary showing 32 procs = 2.0x of 8, vs 3.2x clean), doc_term
 (fused Arrow tokenize, 32 JVM task threads + 32 Python workers = 64
 runnable procs) took 113s at local[32] vs 16.5s at local[8], while the
@@ -380,8 +380,8 @@ compute-heavier per byte). On a REAL cluster the north rule's N→4N is
 scales WITH the cluster there, so the single-box headline ratio above
 is a CONSERVATIVE LOWER BOUND on the plan's true executor-scaling efficiency:
 nothing in the plan itself serializes (no driver collect, no global
-window, no unsharded sink — PLANS.md), and the per-stage probe
-(`probe_width_build.py`) shows the pure-JVM-compute stage (doc_term)
+window, no unsharded sink — PLANS.md), and the per-stage timers show
+the pure-JVM-compute stage (doc_term)
 scaling at the full pure-CPU anchor while the streaming-heavy stages
 (postings encode+write) sit at the bandwidth anchor. Headline
 sessions vary with the VM's bandwidth-contention window (per-session
@@ -425,8 +425,8 @@ machine noise, not software.
 
 Multi-million-doc single-JVM envelope (build + auto-m prune + tiered
 serving + LSH dedup, per-phase heap high-water): see `BENCH/MEMORY.md`
-(`scripts/probe_memory_cliff.py`; raw phases in
-`BENCH/memory_envelope.json`).
+(raw phases in `BENCH/memory_envelope.json`; the probe script that
+measured it is in git history).
 """
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)

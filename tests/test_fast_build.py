@@ -78,85 +78,6 @@ def test_build_with_pre_term_sign(spark, tmp_path, write_tokens):
     assert checked > 100
 
 
-def test_jvm_path_equals_python_path(spark, tmp_path):
-    """The all-JVM fused doc_term plan (BuildConfig.jvm_tokenize=True,
-    available for tokenizers with a Java-regex twin) produces a store
-    identical to the Arrow/pandas fused path: same term_stats, postings,
-    doc stats, and the same pre_term_sign adjacency column."""
-    src = source_files(spark, N, seed=57)
-    stop = frozenset(make_stopwords())
-    jvm = build_index(
-        spark, src, str(tmp_path / "jvm"),
-        BuildConfig(stopwords=stop, write_tokens=False, write_pre_term_sign=True,
-                    jvm_tokenize=True),
-    )
-    py = build_index(
-        spark, src, str(tmp_path / "py"),
-        BuildConfig(stopwords=stop, write_tokens=False, write_pre_term_sign=True,
-                    jvm_tokenize=False),
-    )
-    ts_j = {r["term_sign"]: (r["df"], r["ttf"], r["idf"], r["term"], r["term_len"])
-            for r in jvm.term_stats(spark).collect()}
-    ts_p = {r["term_sign"]: (r["df"], r["ttf"], r["idf"], r["term"], r["term_len"])
-            for r in py.term_stats(spark).collect()}
-    assert ts_j == ts_p
-    assert _postings(spark, jvm) == _postings(spark, py)
-    cols = ["doc_id", "term_sign", "tf", "first_idx", "doc_len", "n_terms",
-            "pre_term_sign"]
-    dt_j = {tuple(r[c] for c in cols[:2]): tuple(r[c] for c in cols[2:])
-            for r in jvm.doc_term(spark).select(*cols).collect()}
-    dt_p = {tuple(r[c] for c in cols[:2]): tuple(r[c] for c in cols[2:])
-            for r in py.doc_term(spark).select(*cols).collect()}
-    assert dt_j == dt_p
-    ds_j = {r["doc_id"]: r for r in jvm.docs(spark).collect()}
-    ds_p = {r["doc_id"]: r for r in py.docs(spark).collect()}
-    assert set(ds_j) == set(ds_p)
-    for k in ds_j:
-        assert ds_j[k]["doc_len"] == ds_p[k]["doc_len"]
-        assert ds_j[k]["n_terms"] == ds_p[k]["n_terms"]
-        assert math.isclose(ds_j[k]["vec_module"], ds_p[k]["vec_module"], rel_tol=1e-9)
-    assert jvm.meta()["avg_doc_len"] == py.meta()["avg_doc_len"]
-    import json
-    import os
-    with open(os.path.join(jvm.lineage_path, "doc_term.json")) as f:
-        assert json.load(f)["jvm_tokenize"] is True
-    with open(os.path.join(py.lineage_path, "doc_term.json")) as f:
-        assert json.load(f)["jvm_tokenize"] is False
-
-
-def test_jvm_tokenize_rejects_write_tokens(spark, tmp_path):
-    """jvm_tokenize=True with write_tokens=True (the BuildConfig default)
-    fails fast instead of silently running Python workers: the token
-    table is Python-tokenized and doc_term derives from it, so the
-    all-JVM plan would never execute."""
-    import pytest as _pytest
-
-    src = source_files(spark, 5, seed=2)
-    with _pytest.raises(ValueError, match="write_tokens"):
-        build_index(
-            spark, src, str(tmp_path / "jvmtok"),
-            BuildConfig(jvm_tokenize=True),
-        )
-
-
-def test_jvm_tokenize_true_requires_spec(spark, tmp_path):
-    """jvm_tokenize=True with a tokenizer that has no Java twin raises."""
-    import pytest as _pytest
-
-    from tiny_search_engine_spark.tokenizer import (
-        DictTokenizer, register_tokenizer,
-    )
-
-    register_tokenizer("dict_jvm_test", DictTokenizer(["foo", "bar"]))
-    src = source_files(spark, 5, seed=1)
-    with _pytest.raises(ValueError, match="JvmRegexSpec"):
-        build_index(
-            spark, src, str(tmp_path / "nospec"),
-            BuildConfig(tokenizer="dict_jvm_test", write_tokens=False,
-                        jvm_tokenize=True),
-        )
-
-
 def test_bucketed_store_exchange_free_and_identical(spark, tmp_path):
     """BuildConfig.bucket_tables: the forward tables (doc_term /
     doc_stats / tokens) written doc_id-bucketed make every doc_id-keyed

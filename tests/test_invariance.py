@@ -48,7 +48,7 @@ def test_resume_equals_single_shot(spark, tmp_path):
     # simulate a crash: build, then destroy the postings + docs stages
     crashed = build_index(spark, src, str(tmp_path / "crash"), cfg)
     shutil.rmtree(crashed.postings_path)
-    os.remove(os.path.join(crashed.docs_path, "_SUCCESS"))
+    os.remove(os.path.join(crashed.doc_stats_path, "_SUCCESS"))
     resumed = build_index(spark, src, str(tmp_path / "crash"), cfg, resume=True)
 
     assert _postings_map(spark, resumed) == _postings_map(spark, full)

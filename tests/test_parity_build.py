@@ -103,40 +103,67 @@ def test_stopwords_absent_from_postings(spark, tiny_store, stopwords):
     )
 
 
-def test_posting_grouping_modes_identical(spark, stopwords, tmp_path):
-    """sort-based grouping (shuffle+sortWithinPartitions+contiguous-run
-    encode) produces bit-identical postings to groupBy+collect_list,
-    including across Arrow batch boundaries (tiny batch size forces the
-    encoder's cross-batch carry path)."""
+def test_sorted_run_postings_match_driver_encoding(spark, stopwords, tmp_path):
+    """The sort-based posting build (shuffle + sortWithinPartitions +
+    contiguous-run encode) equals, bit for bit and for every
+    (term_sign, shard) list, compress.encode_posting run on the driver
+    over the store's own doc_term (stopwords removed, shards recomputed
+    with range_shard). A 7-row Arrow batch forces the encoder's
+    cross-batch carry; 64 postings per shard forces multi-shard lists."""
+    from collections import defaultdict
+
     from tiny_search_engine_spark.build import BuildConfig, build_index
+    from tiny_search_engine_spark.compress import encode_posting, range_shard
+    from tiny_search_engine_spark.hashing import term_sign
     from tiny_search_engine_spark.synth import source_files
 
     src = source_files(spark, 120, seed=42)
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    outs = {}
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        for mode in ("sort", "agg"):
-            out = str(tmp_path / mode)
-            cfg = BuildConfig(
-                tokenizer="code",
-                stopwords=frozenset(stopwords),
-                postings_per_shard=64,
-                block_size=16,
-                posting_grouping=mode,
-                write_tokens=False,
-            )
-            store = build_index(spark, src, out, cfg)
-            outs[mode] = {
-                (r["term_sign"], r["shard"]): (
-                    bytes(r["doc_bytes"]), bytes(r["tf_bytes"]),
-                    bytes(r["dl_bytes"]), r["n_docs"], r["n_shards"],
-                    round(r["idf"], 12), list(r["block_last"]),
-                    list(r["block_max_tf"]), list(r["block_min_dl"]),
-                )
-                for r in store.postings(spark).collect()
-            }
+        cfg = BuildConfig(
+            tokenizer="code",
+            stopwords=frozenset(stopwords),
+            postings_per_shard=64,
+            block_size=16,
+            write_tokens=False,
+        )
+        store = build_index(spark, src, str(tmp_path / "store"), cfg)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
-    assert outs["sort"] == outs["agg"]
-    assert len(outs["sort"]) > 0
+
+    stop = {term_sign(w) for w in stopwords}
+    stats = {
+        r["term_sign"]: (r["n_shards"], r["idf"])
+        for r in store.term_stats(spark).collect()
+    }
+    lists = defaultdict(list)
+    for r in store.doc_term(spark).select("term_sign", "doc_id", "tf", "doc_len").collect():
+        if r["term_sign"] not in stop:
+            lists[r["term_sign"]].append((r["doc_id"], r["tf"], r["doc_len"]))
+    want = {}
+    for ts, rows in lists.items():
+        rows.sort()  # doc_id ascending, as the partition sort delivers it
+        d, t, dl = (np.array(c, dtype=np.int64) for c in zip(*rows))
+        n_shards, idf = stats[ts]
+        shard = range_shard(d, n_shards)
+        for sh in np.unique(shard):
+            sel = shard == sh
+            enc = encode_posting(d[sel], t[sel], dl[sel], block_size=16, presorted=True)
+            want[(ts, int(sh))] = (
+                enc.doc_bytes, enc.tf_bytes, enc.dl_bytes, enc.n_docs,
+                enc.block_last, enc.block_max_tf, enc.block_min_dl,
+                n_shards, idf,
+            )
+    got = {
+        (r["term_sign"], r["shard"]): (
+            bytes(r["doc_bytes"]), bytes(r["tf_bytes"]), bytes(r["dl_bytes"]),
+            r["n_docs"], list(r["block_last"]), list(r["block_max_tf"]),
+            list(r["block_min_dl"]), r["n_shards"], r["idf"],
+        )
+        for r in store.postings(spark).collect()
+    }
+    assert got == want
+    # the settings did reach the paths they are meant to force
+    assert any(sh > 0 for _, sh in got)  # multi-shard lists
+    assert any(v[3] > 16 for v in got.values())  # multi-block, multi-batch runs

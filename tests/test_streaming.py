@@ -545,6 +545,16 @@ def test_incremental_prune_equals_full_reprune(spark, tmp_path):
     # input (and possibly the only champion copy)
     with pytest.raises(ValueError, match="input store"):
         prune_store_incremental(spark, s1, p1_inc, delta_ids, p1_inc.root)
+    # ... and so must an out_dir that is an ancestor of an input (the
+    # wipe would delete every store under it — `prune --out /data
+    # --store /data/full --force`) or a descendant of one
+    with pytest.raises(ValueError, match="input store"):
+        prune_store(spark, s1, str(tmp_path), m=8, force=True)
+    with pytest.raises(ValueError, match="input store"):
+        prune_store_incremental(
+            spark, s1, p1_inc, delta_ids, os.path.join(p1_inc.root, "sub")
+        )
+    assert os.path.exists(s1.meta_path) and os.path.exists(p1_inc.meta_path)
 
     # SECOND delta cycle: chained incrementals must still equal the full
     # snapshot-pinned twin — in particular for terms BORN in delta 1 and

@@ -224,7 +224,8 @@ def test_prune_subcommand_auto_m_and_incremental(spark, tmp_path, capsys):
     """`tse_job prune --auto-m-queries/--target-tier1` derives m from the
     workload (choose_prune_m), and `--incremental --prev --delta-ids`
     routes through prune_store_incremental, inheriting the previous
-    store's m and snapshot."""
+    store's m and snapshot (and refusing --m / --auto-m-queries /
+    --target-tier1, which it could not honour)."""
     from tiny_search_engine_spark.build import (
         BuildConfig,
         SegmentStore,
@@ -278,3 +279,16 @@ def test_prune_subcommand_auto_m_and_incremental(spark, tmp_path, capsys):
     assert inc.meta()["prune_m"] == want_m
     assert inc.meta()["incremental_from"] == out
     assert inc.postings(spark).count() > 0
+
+    # m comes from --prev, so the flags that would choose another m are
+    # refused rather than silently ignored — the 0.8 default included
+    for extra in (["--m", "4"], ["--auto-m-queries", str(qfile)],
+                  ["--target-tier1", "0.8"]):
+        with pytest.raises(SystemExit) as exc:
+            main_prune([
+                "--store", full2.root, "--out", str(tmp_path / "pruned3"),
+                "--incremental", "--prev", out, "--delta-ids", dpath, *extra,
+            ])
+        assert exc.value.code == 2
+        assert extra[0] in capsys.readouterr().err
+    assert not os.path.exists(tmp_path / "pruned3")

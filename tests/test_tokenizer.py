@@ -163,61 +163,3 @@ def test_pre_term_sign_adjacency():
             assert got[(i, s)] == ent[3], (i, s)
     # case-folding: doc 2 'b B' -> B is a dup of b, not a new first occ
     assert got[(2, a)] == b
-
-
-def test_jvm_regex_spec_parity(spark):
-    """The Java-regex twins (JvmRegexSpec) of the builtin tokenizers must
-    reproduce the Python token stream AND the last-token-end scan exactly,
-    including the class edges where Java and Python regex disagree
-    (No/Nl numerics ² ½ ①, combining marks, \\x1c-\\x1f Python-only
-    whitespace, NBSP/NEL, unicode digits inside numbers)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from tiny_search_engine_spark.tokenizer import (
-        _last_token_end_code,
-        _last_token_end_ws,
-        jvm_tokenizer_spec,
-        tokenize,
-    )
-
-    random.seed(7)
-    alphabet = list(
-        "abcXYZ_09 .;+-*/(){}\t\n'\"#éß中文٣½² µΩ①\x1c\x1d\x1f\x85\xa0​́　﻿"
-        "Ⅻⅷ〡丸ʼˮ‍⁠  ᠎߀३"  # Nl, Lo, Lm, Cf, Zl/Zp, Mongolian sep, NKo/Devanagari digits
-    )
-    samples = [
-        "def foo(bar): return 1.5",
-        "",
-        "  \t ",
-        "é中 ½②٣ _x",
-        "x²y³ ①",
-        "\x1cfoo\x1d",
-        "3.٣",
-        "٣.3",
-        "a._",
-        "trailing_under_ ",
-    ] + [
-        "".join(random.choice(alphabet) for _ in range(random.randint(0, 60)))
-        for _ in range(600)
-    ]
-    last_end = {"code": _last_token_end_code, "ws": _last_token_end_ws}
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(samples)], "id int, content string"
-    )
-    for mode in ("code", "ws"):
-        spec = jvm_tokenizer_spec(mode)
-        assert spec is not None
-        got = df.select(
-            "id",
-            F.regexp_extract_all("content", F.lit(spec.pattern), 0).alias("toks"),
-            (
-                F.length("content")
-                - F.length(F.regexp_extract("content", spec.trailing, 0))
-            ).alias("end"),
-        ).collect()
-        for r in got:
-            s = samples[r["id"]]
-            assert list(r["toks"]) == [t.term for t in tokenize(s, mode)], (mode, s)
-            assert r["end"] == last_end[mode](s), (mode, s)

@@ -86,12 +86,6 @@ class SegmentStore:
         return os.path.join(self.root, "doc_stats")
 
     @property
-    def docs_path(self) -> str:
-        # legacy alias (pre-split "docs" table) — the stats table is the
-        # stage whose _SUCCESS marker gates resume
-        return self.doc_stats_path
-
-    @property
     def tokens_path(self) -> str:
         return os.path.join(self.root, "tokens")
 
@@ -321,52 +315,14 @@ POSTINGS_RUN_SCHEMA = (
 )
 
 
-def _make_posting_encoder(block_size: int):
-    """mapInPandas encoder over JVM-pre-grouped lists: input rows are
-    (term_sign, shard, doc_ids, tfs, dls) — one row per posting list, many
-    lists per Arrow batch. The groupBy+collect_list happens JVM-side (with
-    map-side partial aggregation); Python only sees aligned numpy arrays,
-    so per-group pandas overhead is gone (was one 1-row DataFrame per group
-    with applyInPandas — measurable at millions of tiny terms). Like the
-    sorted-run encoder, per-term constants (n_shards, idf) are NOT in the
-    dataflow — the census broadcast-joins onto the per-list output."""
-
-    def encode(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "term_sign", "shard", "bucket", "n_docs",
-                "doc_bytes", "tf_bytes", "dl_bytes", "block_last",
-                "block_max_tf", "block_min_dl", "bytes_total",
-            )}
-            for row in pdf.itertuples():
-                enc = encode_posting(
-                    row.doc_ids, row.tfs, row.dls, block_size=block_size
-                )
-                ts = int(row.term_sign)
-                out["term_sign"].append(ts)
-                out["shard"].append(int(row.shard))
-                out["bucket"].append(ts % POSTING_BUCKETS)
-                out["n_docs"].append(enc.n_docs)
-                out["doc_bytes"].append(enc.doc_bytes)
-                out["tf_bytes"].append(enc.tf_bytes)
-                out["dl_bytes"].append(enc.dl_bytes)
-                out["block_last"].append(enc.block_last)
-                out["block_max_tf"].append(enc.block_max_tf)
-                out["block_min_dl"].append(enc.block_min_dl)
-                out["bytes_total"].append(enc.bytes_total)
-            yield pd.DataFrame(out)
-
-    return encode
-
-
 def _make_sorted_run_encoder(block_size: int):
     """mapInPandas encoder over SORT-grouped partitions: input rows are
     (term_sign, shard, doc_id, tf, doc_len) sorted by
-    (term_sign, shard, doc_id) within each partition — the sort-based
-    grouping alternative to groupBy+collect_list (no aggregation buffers,
-    no per-list argsort; groups are contiguous runs, detected with one
+    (term_sign, shard, doc_id) within each partition — no aggregation
+    buffers, no per-list argsort, and no posting list ever held whole in
+    a JVM buffer; groups are contiguous runs, detected with one
     vectorized boundary scan per Arrow batch; a run spanning batch
-    boundaries is carried across).
+    boundaries is carried across.
 
     Deliberately NOT in the input: the per-term constants (n_shards,
     idf). Shuffling them on every posting row widens each UnsafeRow by
@@ -440,115 +396,6 @@ def _make_sorted_run_encoder(block_size: int):
             yield pd.DataFrame(out)
 
     return encode
-
-
-def _jvm_doc_term(src: DataFrame, cfg: BuildConfig) -> DataFrame | None:
-    """All-JVM fused doc_term plan (no Python in the hot path), or None
-    when the configured tokenizer has no Java-regex twin.
-
-    The Arrow/pandas fast path must stream every corpus byte out of the
-    JVM (Arrow IPC) and rehydrate it as Python str objects (~4x the UTF-8
-    bytes) before tokenizing — at two parallelism levels that traffic is
-    the build's dominant memory-bandwidth draw, and the doubled process
-    count (JVM task threads + Python workers) is what the width probe
-    (scripts/probe_width_build.py) caught being punished under scheduler
-    pressure. This plan keeps tokenization inside whole-stage codegen:
-
-        regexp_extract_all (Java twin of the Python pattern)
-          -> posexplode                      [no materialized token table]
-          -> partial hash-agg (doc_id, sign) [exploded rows never shuffle]
-          -> exchange of doc_term-sized rows -> final agg
-
-    Output is column- and value-identical to make_doc_term_iterator
-    (schema DOC_TERM_SCHEMA[_PRE]); the only representational difference
-    is that the display ``term`` is non-null on every row here vs one
-    representative row per Arrow batch there — consumers aggregate it
-    with first(ignorenulls) either way. Token-stream parity of the twins
-    is pinned by tests/test_tokenizer.py::test_jvm_regex_spec.
-
-    Measured (300k synth docs, 45M tokens, local[8], tmpfs scratch): the
-    regex scan itself is FASTER than Python findall (3.2s for the full
-    tokenize+size pass), but the (doc_id, sign) hash aggregate dominates
-    at ~23s because source code has tf ≈ 1.5 — ~0.7 groups per token —
-    so the agg hash table is ~token-count sized and churns, where the
-    pandas path's factorize + np.unique reduce the same keys sort-based
-    in C (doc_term stage: 25.3s JVM vs 11.3s pandas). Hence opt-in
-    (BuildConfig.jvm_tokenize=True), not the default: its value is
-    structural (zero Python workers — immune to the runqueue-depth
-    penalty probe_width_build.py measured under scheduler pressure, and
-    deployable where executors ship no Python), not raw throughput."""
-    from .tokenizer import jvm_tokenizer_spec
-
-    spec = jvm_tokenizer_spec(cfg.tokenizer)
-    if spec is None:
-        return None
-    toks = F.regexp_extract_all("content", F.lit(spec.pattern), F.lit(0))
-    doc_len = (
-        F.length("content")
-        - F.length(F.regexp_extract("content", spec.trailing, 0))
-    ).cast("int")
-    base = (
-        src.select(
-            "doc_id",
-            toks.alias("toks"),
-            doc_len.alias("doc_len"),
-        )
-        # token-less (and NULL-content: size(NULL) = -1) docs rejected,
-        # like the Python path (table.cpp:270)
-        .filter(F.size("toks") > 0)
-        .withColumn("n_terms", F.size("toks").cast("int"))
-    )
-    if cfg.write_pre_term_sign:
-        prevs = F.concat(
-            F.array(F.lit(None).cast("string")),
-            F.slice("toks", 1, F.size("toks") - 1),
-        )
-        ex = base.select(
-            "doc_id",
-            "doc_len",
-            "n_terms",
-            F.posexplode(F.arrays_zip(F.col("toks").alias("t"), prevs.alias("p"))),
-        ).select(
-            "doc_id",
-            "doc_len",
-            "n_terms",
-            F.col("pos"),
-            F.col("col.t").alias("term"),
-            F.col("col.p").alias("prev"),
-        )
-    else:
-        ex = base.select(
-            "doc_id", "doc_len", "n_terms", F.posexplode("toks").alias("pos", "term")
-        )
-    aggs = [
-        F.min_by("term", "pos").alias("term"),  # first occurrence's display
-        F.count("*").cast("int").alias("tf"),
-        F.min("pos").cast("int").alias("first_idx"),
-        F.first("doc_len").alias("doc_len"),
-        F.first("n_terms").alias("n_terms"),
-    ]
-    if cfg.write_pre_term_sign:
-        # display of the token preceding the FIRST occurrence; NULL when
-        # doc-initial (pos 0 zipped against the shifted-in NULL)
-        aggs.append(F.min_by("prev", "pos").alias("prev"))
-    g = ex.groupBy("doc_id", F.xxhash64(F.lower("term")).alias("term_sign")).agg(*aggs)
-    out = [
-        "doc_id",
-        "term_sign",
-        "term",
-        F.length("term").cast("int").alias("term_len"),
-        "tf",
-        "first_idx",
-        "doc_len",
-        "n_terms",
-    ]
-    if cfg.write_pre_term_sign:
-        out.append(
-            F.when(F.col("prev").isNull(), F.lit(0).cast("long"))
-            .otherwise(F.xxhash64(F.lower("prev")))
-            .alias("pre_term_sign")
-        )
-    return g.select(*out)
 
 
 def with_doc_id(source_df: DataFrame) -> DataFrame:
@@ -696,19 +543,8 @@ def build_index(
         return _read_forward("tokens", store.tokens_path)
 
     def job_doc_term() -> tuple[DataFrame, int | None]:
-        if cfg.jvm_tokenize and cfg.write_tokens:
-            # fail fast (same contract as the missing-JvmRegexSpec raise
-            # below): the positional token table only exists via the
-            # Python tokenizer, and doc_term is then derived from it —
-            # the all-JVM fused plan would silently never run
-            raise ValueError(
-                "jvm_tokenize=True is incompatible with write_tokens=True "
-                "(the token table forces the Python tokenize path); set "
-                "write_tokens=False for the pure-JVM build"
-            )
         tokens = _timed("tokens", job_tokens)
         n_docs: int | None = None
-        used_jvm: bool | None = None
         if not (resume and _stage_done(store.doc_term_path)):
             if tokens is not None:
                 per_doc = tokens.groupBy("doc_id").agg(
@@ -750,35 +586,19 @@ def build_index(
                         "source_df is required: the doc_term stage is not "
                         f"complete under {store.doc_term_path}"
                     )
-                doc_term = None
-                if cfg.jvm_tokenize:
-                    # all-JVM fused plan (regexp twin of the tokenizer):
-                    # content bytes stay inside whole-stage codegen — no
-                    # Arrow corpus streaming, no Python workers. Opt-in:
-                    # the pandas path below wins on throughput here (see
-                    # BuildConfig.jvm_tokenize / _jvm_doc_term docs).
-                    doc_term = _jvm_doc_term(tokenize_src, cfg)
-                    used_jvm = doc_term is not None
-                    if doc_term is None:
-                        raise ValueError(
-                            f"jvm_tokenize=True but tokenizer {cfg.tokenizer!r} "
-                            "declares no JvmRegexSpec"
-                        )
-                if doc_term is None:
-                    # term_sign/term_len ride out of the iterator (signs
-                    # are computed once per batch-unique term in Python,
-                    # bit-equal to F.xxhash64(F.lower(term)) —
-                    # tests/test_hashing.py; the display string is
-                    # non-null on one row per batch-unique term, so no
-                    # JVM hash/lower pass over millions of rows)
-                    dt_fn = make_doc_term_iterator(
-                        cfg.tokenizer, "doc_id", "content",
-                        with_pre_sign=cfg.write_pre_term_sign,
-                    )
-                    doc_term = tokenize_src.select("doc_id", "content").mapInPandas(
-                        dt_fn,
-                        DOC_TERM_SCHEMA_PRE if cfg.write_pre_term_sign else DOC_TERM_SCHEMA,
-                    )
+                # term_sign/term_len ride out of the iterator (signs are
+                # computed once per batch-unique term in Python, bit-equal
+                # to F.xxhash64(F.lower(term)) — tests/test_hashing.py; the
+                # display string is non-null on one row per batch-unique
+                # term, so no JVM hash/lower pass over millions of rows)
+                dt_fn = make_doc_term_iterator(
+                    cfg.tokenizer, "doc_id", "content",
+                    with_pre_sign=cfg.write_pre_term_sign,
+                )
+                doc_term = tokenize_src.select("doc_id", "content").mapInPandas(
+                    dt_fn,
+                    DOC_TERM_SCHEMA_PRE if cfg.write_pre_term_sign else DOC_TERM_SCHEMA,
+                )
             # N (forward-table size = docs with >=1 token, table.cpp:270)
             # rides the write via observe(): exactly one doc_term row per
             # doc has first_idx == 0 (the term at token position 0) — no
@@ -802,7 +622,6 @@ def build_index(
                 "doc_term",
                 {
                     "fused_tokenize": tokens is None,
-                    "jvm_tokenize": bool(tokens is None and used_jvm),
                     "n_docs": n_docs,
                     "bucket_tables": int(cfg.bucket_tables or 0),
                 },
@@ -967,37 +786,20 @@ def build_index(
                 )
             ).cast("int"),
         )
-        if cfg.posting_grouping == "sort":
-            # sort-based grouping: ONE hash shuffle on the salted key +
-            # spillable partition sort; posting lists are contiguous runs
-            # encoded straight off the sorted Arrow stream (no aggregation
-            # buffers, no per-list argsort — the external-sort build every
-            # at-scale indexer uses). Only the 5 per-posting columns ride
-            # the exchange + sort; the per-term constants (n_shards, idf)
-            # rejoin from the broadcast census AFTER encoding, on the
-            # one-row-per-list output (see _make_sorted_run_encoder).
-            slim = enriched.select("term_sign", "shard", "doc_id", "tf", "doc_len")
-            runs = (
-                slim.repartition(F.col("term_sign"), F.col("shard"))
-                .sortWithinPartitions("term_sign", "shard", "doc_id")
-                .mapInPandas(_make_sorted_run_encoder(cfg.block_size), POSTINGS_RUN_SCHEMA)
-            )
-        else:
-            slim = enriched.select("term_sign", "shard", "doc_id", "tf", "doc_len")
-            grouped = (
-                slim.groupBy("term_sign", "shard")
-                .agg(F.collect_list(F.struct("doc_id", "tf", "doc_len")).alias("pl"))
-                .select(
-                    "term_sign",
-                    "shard",
-                    F.col("pl.doc_id").alias("doc_ids"),
-                    F.col("pl.tf").alias("tfs"),
-                    F.col("pl.doc_len").alias("dls"),
-                )
-            )
-            runs = grouped.mapInPandas(
-                _make_posting_encoder(cfg.block_size), POSTINGS_RUN_SCHEMA
-            )
+        # sort-based grouping: ONE hash shuffle on the salted key +
+        # spillable partition sort; posting lists are contiguous runs
+        # encoded straight off the sorted Arrow stream (no aggregation
+        # buffers, no per-list argsort — the external-sort build every
+        # at-scale indexer uses). Only the 5 per-posting columns ride the
+        # exchange + sort; the per-term constants (n_shards, idf) rejoin
+        # from the broadcast census AFTER encoding, on the one-row-per-list
+        # output (see _make_sorted_run_encoder).
+        runs = (
+            enriched.select("term_sign", "shard", "doc_id", "tf", "doc_len")
+            .repartition(F.col("term_sign"), F.col("shard"))
+            .sortWithinPartitions("term_sign", "shard", "doc_id")
+            .mapInPandas(_make_sorted_run_encoder(cfg.block_size), POSTINGS_RUN_SCHEMA)
+        )
         # no broadcast hint: the census is vocab-sized (hundreds of
         # millions of terms at the 100 TB design point), so the choice
         # between broadcast and shuffle join belongs to Catalyst/AQE —
@@ -1098,9 +900,11 @@ def _wipe_derived_out_dir(
     out_dir: str, force: bool, inputs: tuple[str, ...] = ()
 ) -> None:
     """Shared out_dir preparation for the prune family: refuse to wipe
-    (a) any of the INPUT store roots — the selection plan is lazy, so an
-    in-place out_dir would delete the very files the write then reads
-    (FileNotFound at best, silent row loss at worst) — and (b) a
+    (a) any INPUT store root, or an ancestor or descendant of one — the
+    selection plan is lazy, so an overlapping out_dir would delete the
+    very files the write then reads (FileNotFound at best, silent row
+    loss at worst), and an ancestor wipe takes the whole input store
+    with it — and (b) a
     non-empty directory that is not a segment store, unless force=True
     (a mistyped --out must not delete an arbitrary tree). A previous
     DERIVED store at out_dir is wiped: stale _SUCCESS markers from an
@@ -1108,12 +912,16 @@ def _wipe_derived_out_dir(
     against the new doc_term."""
     import shutil
 
-    out_abs = os.path.abspath(out_dir)
+    out_abs = os.path.realpath(out_dir)
     for inp in inputs:
-        if inp and os.path.abspath(inp) == out_abs:
+        if not inp:
+            continue
+        inp_abs = os.path.realpath(inp)
+        if os.path.commonpath([out_abs, inp_abs]) in (out_abs, inp_abs):
             raise ValueError(
-                f"out_dir {out_dir} is an input store of this operation; "
-                "pruning is store-to-store — write to a fresh directory "
+                f"out_dir {out_dir} overlaps {inp}, an input store of this "
+                "operation (same directory, ancestor or descendant); "
+                "pruning is store-to-store — write to a separate directory "
                 "and swap afterwards"
             )
     if os.path.isdir(out_dir) and os.listdir(out_dir):
@@ -1180,6 +988,75 @@ def _snapshot_idf(
     )
 
 
+def _write_pruned_store(
+    spark: SparkSession,
+    src: SegmentStore,
+    pruned: DataFrame,
+    out_dir: str,
+    m: int,
+    sel_avgdl: float,
+    sel_idf_from: str,
+    incremental_from: str | None = None,
+) -> SegmentStore:
+    """Shared tail of prune_store and prune_store_incremental: write the
+    *pruned* doc_term (with its stage marker + lineage) into the already
+    wiped *out_dir*, share the source id-map, rebuild the remaining
+    stages through build_index's resume path, then pin the collection
+    stats and selection provenance in meta.
+
+    The lineage pins the SOURCE n_docs, so N and the total-tf idf of
+    unpruned terms are unchanged. docs_raw is copied; tokens (if any)
+    are NOT carried — the pruned store serves the fast path (bm25/wand),
+    not search()."""
+    import shutil
+
+    meta = src.meta()
+    out = SegmentStore(out_dir)
+    pruned.write.mode("overwrite").parquet(out.doc_term_path)
+    shutil.copytree(src.docs_raw_path, out.docs_raw_path, dirs_exist_ok=True)
+    provenance = {"pruned_from": src.root, "prune_m": int(m)}
+    if incremental_from is not None:
+        provenance["incremental_from"] = incremental_from
+    _write_lineage(
+        out,
+        "doc_term",
+        {
+            **provenance,
+            "n_docs": int(meta["n_docs"]),
+            "fused_tokenize": False,
+            "bucket_tables": 0,
+        },
+    )
+    cfg = BuildConfig(
+        tokenizer=meta["tokenizer"],
+        stopwords=frozenset(meta.get("stopwords", [])),
+        block_size=int(meta["block_size"]),
+        postings_per_shard=int(meta["postings_per_shard"]),
+        write_tokens=False,
+        copy_content=bool(meta.get("copy_content", True)),
+    )
+    out = build_index(spark, None, out_dir, cfg, resume=True)
+    # pin the COLLECTION stats to the source store (Carmel semantics:
+    # pruning changes which postings are stored, never the scoring
+    # model). idf already uses the source n_docs via the lineage pin
+    # above; meta's n_docs/avg_doc_len feed BM25's Kd at query time and
+    # would otherwise drift whenever a doc loses ALL its postings (e.g.
+    # all-hot-term boilerplate under aggressive m) — which would break
+    # the tier-1 bit-identity certificate tiered_wand_topk relies on.
+    out_meta = out.meta()
+    out_meta["n_docs_with_postings"] = out_meta.get("n_docs")
+    out_meta["n_docs"] = int(meta["n_docs"])
+    out_meta["avg_doc_len"] = float(meta["avg_doc_len"])
+    out_meta.update(provenance)
+    # selection snapshot provenance: which scoring picked the champions
+    # (prune_store_incremental reuses it so unchanged terms never churn)
+    out_meta["sel_avgdl"] = float(sel_avgdl)
+    out_meta["sel_idf_from"] = sel_idf_from
+    with open(out.meta_path, "w") as f:
+        json.dump(out_meta, f, indent=2)
+    return out
+
+
 def prune_store(
     spark: SparkSession,
     src: SegmentStore,
@@ -1225,8 +1102,6 @@ def prune_store(
     """
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    import shutil
-
     meta = src.meta()
     avgdl = float(meta["avg_doc_len"]) or 1.0
     sel_avgdl = float(sel_avgdl) if sel_avgdl is not None else avgdl
@@ -1238,55 +1113,11 @@ def prune_store(
     )
     pruned = _impact_topm(dt, idf, sel_avgdl, m, k1, b)
     # the pruned store is a wholly derived artifact: wipe-with-guards
-    # (in-place refusal + non-store refusal; see _wipe_derived_out_dir)
+    # (input-overlap refusal + non-store refusal; see _wipe_derived_out_dir)
     _wipe_derived_out_dir(out_dir, force, inputs=(src.root,))
-    out = SegmentStore(out_dir)
-    pruned.write.mode("overwrite").parquet(out.doc_term_path)
-    # share the id-map bytes; tokens (if any) are NOT carried — the
-    # pruned store serves the fast path (bm25/wand), not search()
-    shutil.copytree(src.docs_raw_path, out.docs_raw_path, dirs_exist_ok=True)
-    _write_lineage(
-        out,
-        "doc_term",
-        {
-            "pruned_from": src.root,
-            "prune_m": m,
-            "n_docs": int(meta["n_docs"]),
-            "fused_tokenize": False,
-            "jvm_tokenize": False,
-            "bucket_tables": 0,
-        },
+    return _write_pruned_store(
+        spark, src, pruned, out_dir, m, sel_avgdl, sel_idf_from or src.root
     )
-    cfg = BuildConfig(
-        tokenizer=meta["tokenizer"],
-        stopwords=frozenset(meta.get("stopwords", [])),
-        block_size=int(meta["block_size"]),
-        postings_per_shard=int(meta["postings_per_shard"]),
-        write_tokens=False,
-        copy_content=bool(meta.get("copy_content", True)),
-    )
-    out = build_index(spark, None, out_dir, cfg, resume=True)
-    # pin the COLLECTION stats to the source store (Carmel semantics:
-    # pruning changes which postings are stored, never the scoring
-    # model). idf already uses the source n_docs via the lineage pin
-    # above; meta's n_docs/avg_doc_len feed BM25's Kd at query time and
-    # would otherwise drift whenever a doc loses ALL its postings (e.g.
-    # all-hot-term boilerplate under aggressive m) — which would break
-    # the tier-1 bit-identity certificate tiered_wand_topk relies on.
-    out_meta = out.meta()
-    pruned_n = out_meta.get("n_docs")
-    out_meta["n_docs"] = int(meta["n_docs"])
-    out_meta["avg_doc_len"] = float(meta["avg_doc_len"])
-    out_meta["pruned_from"] = src.root
-    out_meta["prune_m"] = int(m)
-    out_meta["n_docs_with_postings"] = pruned_n
-    # selection snapshot provenance: which scoring picked the champions
-    # (prune_store_incremental reuses it so unchanged terms never churn)
-    out_meta["sel_avgdl"] = float(sel_avgdl)
-    out_meta["sel_idf_from"] = sel_idf_from or src.root
-    with open(out.meta_path, "w") as f:
-        json.dump(out_meta, f, indent=2)
-    return out
 
 
 def prune_store_incremental(
@@ -1329,8 +1160,6 @@ def prune_store_incremental(
     the _impact_topm window over changed terms only (delta-vocabulary
     bounded), then the ordinary posting rebuild.
     """
-    import shutil
-
     prev_meta = prev_pruned.meta()
     m = prev_meta.get("prune_m")
     if m is None:
@@ -1341,7 +1170,6 @@ def prune_store_incremental(
     old_src = SegmentStore(old_root)
     snap_store = SegmentStore(snap_root)
 
-    meta = src.meta()
     ids = F.broadcast(delta_ids.select("doc_id").distinct())
     new_dt = src.doc_term(spark)
     # terms BORN after the snapshot must re-window every incremental,
@@ -1374,41 +1202,7 @@ def prune_store_incremental(
     _wipe_derived_out_dir(
         out_dir, force, inputs=(src.root, prev_pruned.root, old_root, snap_root)
     )
-    out = SegmentStore(out_dir)
-    pruned.write.mode("overwrite").parquet(out.doc_term_path)
-    shutil.copytree(src.docs_raw_path, out.docs_raw_path, dirs_exist_ok=True)
-    _write_lineage(
-        out,
-        "doc_term",
-        {
-            "pruned_from": src.root,
-            "prune_m": m,
-            "incremental_from": prev_pruned.root,
-            "n_docs": int(meta["n_docs"]),
-            "fused_tokenize": False,
-            "jvm_tokenize": False,
-            "bucket_tables": 0,
-        },
+    return _write_pruned_store(
+        spark, src, pruned, out_dir, m, sel_avgdl, snap_root,
+        incremental_from=prev_pruned.root,
     )
-    cfg = BuildConfig(
-        tokenizer=meta["tokenizer"],
-        stopwords=frozenset(meta.get("stopwords", [])),
-        block_size=int(meta["block_size"]),
-        postings_per_shard=int(meta["postings_per_shard"]),
-        write_tokens=False,
-        copy_content=bool(meta.get("copy_content", True)),
-    )
-    out = build_index(spark, None, out_dir, cfg, resume=True)
-    out_meta = out.meta()
-    pruned_n = out_meta.get("n_docs")
-    out_meta["n_docs"] = int(meta["n_docs"])
-    out_meta["avg_doc_len"] = float(meta["avg_doc_len"])
-    out_meta["pruned_from"] = src.root
-    out_meta["prune_m"] = int(m)
-    out_meta["n_docs_with_postings"] = pruned_n
-    out_meta["sel_avgdl"] = float(sel_avgdl)
-    out_meta["sel_idf_from"] = snap_root
-    out_meta["incremental_from"] = prev_pruned.root
-    with open(out.meta_path, "w") as f:
-        json.dump(out_meta, f, indent=2)
-    return out

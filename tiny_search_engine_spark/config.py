@@ -97,26 +97,6 @@ class BuildConfig:
     # instead of re-reading the parquet it just wrote; spills gracefully
     # when it outgrows executor memory
     cache_doc_term: bool = True
-    # fused doc_term stage engine. True = the all-JVM plan
-    # (regexp_extract_all Java twin + posexplode + partial/final
-    # hash-agg; requires the tokenizer to declare a
-    # tokenizer.JvmRegexSpec — builtins 'code' and 'ws' do): no Arrow
-    # corpus streaming, no Python workers — the variant immune to the
-    # Python-worker oversubscription pathology scripts/
-    # probe_width_build.py documents, for pure-JVM deployments.
-    # None/False = the Arrow/pandas fused path (default): measured ~1.5x
-    # faster end-to-end here because the per-(doc,term) reduction has
-    # ~token-count key cardinality (tf ≈ 1.5 on source code), which a
-    # JVM hash aggregate pays for in hash-table churn while pandas
-    # factorize/np.unique group sort-based in C (see
-    # build._jvm_doc_term). The two plans are output-identical
-    # (tests/test_fast_build.py::test_jvm_path_equals_python_path).
-    jvm_tokenize: bool | None = None
-    # posting-list grouping strategy: 'sort' = one hash shuffle on the
-    # salted key + spillable partition sort, lists encoded as contiguous
-    # runs off the sorted stream (no agg buffers, no per-list argsort);
-    # 'agg' = groupBy + collect_list. Identical output (tests pin it).
-    posting_grouping: str = "sort"
     # forward-side table layout: 0 = plain parquet dirs (default);
     # N > 0 = write doc_term / doc_stats / tokens as hash-BUCKETED
     # tables on doc_id (N buckets, bucket-sorted), the declarative

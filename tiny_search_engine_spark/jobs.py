@@ -404,8 +404,8 @@ def main_prune(argv: list[str]) -> int:
     p.add_argument("--auto-m-queries", default=None,
                    help="derive m from this query log (qid\\tquery per "
                         "line, or bare queries; '-' = stdin)")
-    p.add_argument("--target-tier1", type=float, default=0.8,
-                   help="tier-1 rate target for --auto-m-queries")
+    p.add_argument("--target-tier1", type=float, default=None,
+                   help="tier-1 rate target for --auto-m-queries (default 0.8)")
     p.add_argument("--incremental", action="store_true",
                    help="maintain an existing pruned store per delta "
                         "(requires --prev and --delta-ids)")
@@ -418,12 +418,20 @@ def main_prune(argv: list[str]) -> int:
                    help="overwrite --out even when it is a non-empty "
                         "directory that is not a segment store")
     a = p.parse_args(argv)
+    if a.incremental:
+        if not (a.prev and a.delta_ids):
+            p.error("--incremental requires --prev and --delta-ids")
+        # m is read from --prev: refuse the flags that would choose another
+        for flag, val in (("--m", a.m), ("--auto-m-queries", a.auto_m_queries),
+                          ("--target-tier1", a.target_tier1)):
+            if val is not None:
+                p.error(f"{flag} cannot be used with --incremental "
+                        "(m comes from the --prev store)")
+    target_tier1 = 0.8 if a.target_tier1 is None else a.target_tier1
 
     spark = job_session("tse_prune")
     src = SegmentStore(a.store)
     if a.incremental:
-        if not (a.prev and a.delta_ids):
-            p.error("--incremental requires --prev and --delta-ids")
         delta_ids = spark.read.parquet(a.delta_ids).select("doc_id")
         out = prune_store_incremental(
             spark, src, SegmentStore(a.prev), delta_ids, a.out,
@@ -433,8 +441,8 @@ def main_prune(argv: list[str]) -> int:
     else:
         if a.m is None and a.auto_m_queries:
             queries = _read_queries(a.auto_m_queries)
-            a.m = choose_prune_m(spark, src, queries, a.target_tier1)
-            print(json.dumps({"auto_m": a.m, "target_tier1": a.target_tier1}))
+            a.m = choose_prune_m(spark, src, queries, target_tier1)
+            print(json.dumps({"auto_m": a.m, "target_tier1": target_tier1}))
         if a.m is None:
             p.error("one of --m / --auto-m-queries is required")
         out = prune_store(spark, src, a.out, m=a.m, k1=a.k1,

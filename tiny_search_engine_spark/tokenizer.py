@@ -63,39 +63,13 @@ class Tokenizer:
         return [t.term for t in toks], toks[-1].offset + toks[-1].length
 
 
-class JvmRegexSpec(NamedTuple):
-    """Java-regex twin of a Python tokenizer, for the all-JVM fused build
-    path (build.py ``_jvm_doc_term``): ``pattern`` feeds
-    ``regexp_extract_all`` (one match = one token, same token stream as
-    the Python ``re`` pattern), ``trailing`` is an anchored possessive
-    run of never-in-any-token chars whose length subtracted from
-    ``length(content)`` gives the last token's end — i.e. the JVM twin of
-    ``_last_token_end_*`` below.
-
-    Java and Python regex classes differ (Python ``\\w`` is
-    L*∪N*∪{_}; Java ``(?U)\\w`` is Alpha∪Nd∪M*∪Pc — they disagree on
-    No/Nl like ² ½ ① and on combining marks; Python ``\\s`` additionally
-    matches \\x1c-\\x1f), so the twins spell the Python classes out as
-    explicit ``\\p{..}`` unions instead of reusing the shorthands.
-    Bit-parity is pinned by tests/test_tokenizer.py::test_jvm_regex_spec
-    over an adversarial unicode fuzz corpus; known residual divergence:
-    astral (non-BMP) chars, where Java regex walks UTF-16 units — gate
-    a corpus containing those with ``BuildConfig(jvm_tokenize=False)``."""
-
-    pattern: str
-    trailing: str
-
-
 class RegexTokenizer(Tokenizer):
     """One token per regex match. ``last_end`` optionally supplies an
-    O(trailing-run) last-token-end scan so words_and_end avoids finditer.
-    ``jvm_spec`` (optional) declares the Java-regex twin enabling the
-    all-JVM fused doc_term build stage."""
+    O(trailing-run) last-token-end scan so words_and_end avoids finditer."""
 
-    def __init__(self, pattern: re.Pattern, last_end=None, jvm_spec: "JvmRegexSpec | None" = None):
+    def __init__(self, pattern: re.Pattern, last_end=None):
         self.pat = pattern
         self._last_end = last_end
-        self.jvm_spec = jvm_spec
 
     def tokens(self, text: str) -> list[Token]:
         return [
@@ -377,29 +351,8 @@ def _last_token_end_ws(text: str) -> int:
 
 
 _REGISTRY: dict[str, "Tokenizer"] = {}
-_REGISTRY["code"] = RegexTokenizer(
-    _CODE_RE,
-    _last_token_end_code,
-    jvm_spec=JvmRegexSpec(
-        pattern=r"(?U)[A-Za-z_][A-Za-z0-9_]*|\p{Nd}+(?:\.\p{Nd}+)?|[^\p{L}\p{N}_\s\x1c-\x1f]",
-        trailing=r"(?U)(?:[\s\x1c-\x1f]|[\p{L}\p{N}&&[^\p{Nd}A-Za-z0-9]])*+$",
-    ),
-)
-_REGISTRY["ws"] = RegexTokenizer(
-    _WS_RE,
-    _last_token_end_ws,
-    jvm_spec=JvmRegexSpec(
-        pattern=r"(?U)[^\s\x1c-\x1f]+",
-        trailing=r"(?U)[\s\x1c-\x1f]*+$",
-    ),
-)
-
-
-def jvm_tokenizer_spec(name: str) -> "JvmRegexSpec | None":
-    """The registered tokenizer's Java-regex twin, or None when the
-    tokenizer has no JVM-expressible form (dict/custom tokenizers)."""
-    tok = get_tokenizer(name)
-    return getattr(tok, "jvm_spec", None)
+_REGISTRY["code"] = RegexTokenizer(_CODE_RE, _last_token_end_code)
+_REGISTRY["ws"] = RegexTokenizer(_WS_RE, _last_token_end_ws)
 
 
 def make_doc_term_iterator(
