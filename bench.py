@@ -4,7 +4,7 @@ Prints ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32),
+     SPARK_GRAFT_CPUS   (default: the CPUs this process may run on),
      TSE_BENCH_SYNTH_DOCS (override synthetic corpus size).
 
 The suite covers the two halves of the north rule: index-build throughput
@@ -31,13 +31,13 @@ from tiny_search_engine_spark.build import BuildConfig, build_index
 from tiny_search_engine_spark.config import QueryConfig
 from tiny_search_engine_spark.pipeline import codesearch, dedup, simsearch
 from tiny_search_engine_spark.query import QueryEngine
-from tiny_search_engine_spark.session import get_spark
+from tiny_search_engine_spark.session import default_cpus, get_spark
 from tiny_search_engine_spark.synth import make_queries, make_stopwords, source_files
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     n_synth = int(os.environ.get("TSE_BENCH_SYNTH_DOCS", str(max(2000, int(200_000 * sf)))))
 
@@ -136,42 +136,6 @@ def main() -> None:
         timed_best2("wand_topk_1000q", lambda run: eng.wand_topk(queries, k=20).count())
         timed("bm25_exact_100q", lambda: eng.bm25_topk(queries[:100], k=20).count())
         extra["wand_qps"] = round(len(queries) / timings["wand_topk_1000q"], 2)
-
-        # ---- doc_id-bucketed forward layout (BuildConfig.bucket_tables):
-        # the exact path's records window / doc_stats join / (q,d) agg all
-        # read the bucketed scan's hash partitioning — one hash exchange
-        # left (the per-query rank window). The build pays one extra
-        # write-time shuffle; every query batch saves one after that.
-        bstore = timed_best2(
-            "index_build_bucketed",
-            lambda run: build_index(
-                spark,
-                src,
-                os.path.join(work, f"store_bucketed{run}"),
-                BuildConfig(
-                    tokenizer="code",
-                    stopwords=frozenset(make_stopwords()),
-                    write_tokens=False,
-                    copy_content=False,
-                    per_bucket_metrics=False,
-                    bucket_tables=cpus,
-                ),
-            ),
-        )
-        beng = QueryEngine(spark, bstore, QueryConfig(profile="standard", compat="fixed"))
-        # 500-query batch for the A/B: the saved exchange scales with the
-        # matched-row volume (batch size), the bucketed scan's fixed task
-        # count doesn't — measured crossover is past ~100 queries locally
-        # (controlled interleaved-best-of-3 at 300k docs: 11.3s bucketed
-        # vs 13.4s plain). best-of-2 because a single draw in a VM
-        # throttle window has flipped this A/B's sign before.
-        timed_best2(
-            "bm25_exact_500q", lambda run: eng.bm25_topk(queries[:500], k=20).count()
-        )
-        timed_best2(
-            "bm25_exact_500q_bucketed",
-            lambda run: beng.bm25_topk(queries[:500], k=20).count(),
-        )
 
         # champion-tier store serving: m derived from the 500-query load
         # (choose_prune_m, target 0.9 tier-1), impact-ordered prune, then

@@ -78,97 +78,6 @@ def test_build_with_pre_term_sign(spark, tmp_path, write_tokens):
     assert checked > 100
 
 
-def test_bucketed_store_exchange_free_and_identical(spark, tmp_path):
-    """BuildConfig.bucket_tables: the forward tables (doc_term /
-    doc_stats / tokens) written doc_id-bucketed make every doc_id-keyed
-    join/window in the exact query paths plan WITHOUT a shuffle
-    exchange — bm25_topk's only remaining hash exchange is the final
-    per-query top-k window — while results stay bit-identical to the
-    plain-parquet store, across resume and re-registration."""
-    from tiny_search_engine_spark.config import QueryConfig
-    from tiny_search_engine_spark.query import QueryEngine
-    from tiny_search_engine_spark.synth import make_queries, make_stopwords
-
-    src = source_files(spark, 300, seed=9)
-    stop = frozenset(make_stopwords())
-    plain = build_index(
-        spark, src, str(tmp_path / "plain"), BuildConfig(stopwords=stop)
-    )
-    buck = build_index(
-        spark, src, str(tmp_path / "buck"),
-        BuildConfig(stopwords=stop, bucket_tables=8),
-    )
-    assert buck.meta()["bucket_tables"] == 8
-    qs = [(i, q) for i, q in enumerate(make_queries(6, seed=5))]
-    ep = QueryEngine(spark, plain, QueryConfig(profile="standard", compat="fixed"))
-    eb = QueryEngine(spark, buck, QueryConfig(profile="standard", compat="fixed"))
-
-    def strip(df, score):
-        return sorted(
-            (r["query_id"], r["rank"], r["doc_id"], round(r[score], 9))
-            for r in df.collect()
-        )
-
-    assert strip(ep.bm25_topk(qs, k=10), "bm25") == strip(eb.bm25_topk(qs, k=10), "bm25")
-    assert strip(ep.search(qs, k=5), "final_score") == strip(
-        eb.search(qs, k=5), "final_score"
-    )
-    # plan pin: the bucketed scan's hash partitioning satisfies the
-    # records window, the doc_stats join and the (query,doc) aggregate —
-    # one hash exchange remains (the per-query rank window, irreducible)
-    plan_p = ep.bm25_topk(qs, k=10)._jdf.queryExecution().executedPlan().toString()
-    plan_b = eb.bm25_topk(qs, k=10)._jdf.queryExecution().executedPlan().toString()
-    assert plan_b.count("Exchange hashpartitioning") == 1
-    assert plan_p.count("Exchange hashpartitioning") > 1
-    assert "Bucketed: true" in plan_b
-    # resume on the bucketed store is a no-op rebuild with same results
-    buck2 = build_index(
-        spark, src, str(tmp_path / "buck"),
-        BuildConfig(stopwords=stop, bucket_tables=8),
-    )
-    eb2 = QueryEngine(spark, buck2, QueryConfig(profile="standard", compat="fixed"))
-    assert strip(eb2.bm25_topk(qs, k=10), "bm25") == strip(eb.bm25_topk(qs, k=10), "bm25")
-
-
-def test_resume_rejects_bucket_layout_change(spark, tmp_path):
-    """Resuming an existing store under a different bucket_tables must
-    raise (ADVICE r4): resume skips _SUCCESS-marked stages, so adopting
-    the new N would register a bucket spec the files don't satisfy —
-    a bucketed scan then silently drops files with bucket id >= N."""
-    src = source_files(spark, 60, seed=11)
-    out = str(tmp_path / "store")
-    build_index(spark, src, out, BuildConfig(bucket_tables=8))
-    # resume with a smaller N: refused
-    with pytest.raises(ValueError, match="bucket_tables=8"):
-        build_index(spark, src, out, BuildConfig(bucket_tables=4))
-    # resume a bucketed store as plain: refused too (layout change)
-    with pytest.raises(ValueError, match="bucket_tables=8"):
-        build_index(spark, src, out, BuildConfig(bucket_tables=0))
-    # same N resumes fine; full rebuild may change layout
-    build_index(spark, src, out, BuildConfig(bucket_tables=8))
-    store = build_index(spark, src, out, BuildConfig(bucket_tables=4), resume=False)
-    assert store.meta()["bucket_tables"] == 4
-    assert store.doc_term(spark).count() > 0
-
-
-def test_register_bucketed_cross_checks_files(spark, tmp_path):
-    """_register_bucketed refuses a spec the on-disk filenames don't
-    satisfy: plain files under a bucketed registration, or a bucket
-    count smaller than the ids present (either would silently lose
-    rows in downstream bucketed scans)."""
-    from tiny_search_engine_spark.build import _register_bucketed
-
-    src = source_files(spark, 60, seed=12)
-    plain = build_index(spark, src, str(tmp_path / "plain"), BuildConfig())
-    with pytest.raises(ValueError, match="no bucket id"):
-        _register_bucketed(spark, plain.root, "doc_term", plain.doc_term_path, 8)
-    buck = build_index(
-        spark, src, str(tmp_path / "buck"), BuildConfig(bucket_tables=8)
-    )
-    with pytest.raises(ValueError, match="bucketed into"):
-        _register_bucketed(spark, buck.root, "doc_term", buck.doc_term_path, 4)
-
-
 def test_prune_store_refuses_non_store_dir(spark, tmp_path):
     """prune_store must not rmtree an arbitrary non-store directory
     (a mistyped --out); force=True overrides explicitly."""

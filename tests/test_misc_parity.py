@@ -121,6 +121,36 @@ def test_ltr_rerank_linear_model(spark):
         ltr.try_load_xgboost("/nonexistent")
 
 
+def test_ltr_rerank_nan_feature_equals_missing_key(spark):
+    """An explicit NaN feature value scores like an absent key (0.0),
+    both where the batch has real values for that feature and where it
+    has none."""
+    import numpy as np
+
+    from tiny_search_engine_spark import ltr
+
+    ids = ltr.load_feature_conf()
+    nan = float("nan")
+    rows = [
+        (0, 1, {"F_QU_BM25": 2.0, "F_QU_VSM": nan}),
+        (0, 2, {"F_QU_BM25": 2.0}),
+        (1, 3, {"F_QU_BM25": 1.0, "F_QU_VSM": 0.5}),
+        (1, 4, {"F_QU_BM25": 1.0, "F_QU_VSM": nan}),
+        (1, 5, {"F_QU_BM25": 1.0}),
+    ]
+    df = spark.createDataFrame(rows, "query_id long, doc_id long, features map<string,double>")
+    w = np.zeros(32)
+    w[ids["F_QU_BM25"]] = 1.0
+    w[ids["F_QU_VSM"]] = 10.0
+    got = {
+        r["doc_id"]: r["final_score"]
+        for r in ltr.rerank(df, ltr.LinearModel(weights=w), ids).collect()
+    }
+    assert got[1] == got[2] == 2.0
+    assert got[4] == got[5] == 1.0
+    assert got[3] == 6.0
+
+
 REF_MODEL = "/root/reference/dict/xgb.ltr.model"
 
 

@@ -113,17 +113,31 @@ def test_wand_exact_across_heterogeneous_shard_counts(spark, tiny_store, tiny_go
 def test_wand_batch_scorers_equal_golden(spark, tiny_store, tiny_golden, mode):
     """Both batch scorers (exhaustive sparse-product and pruned TAAT) are
     exact: rank-identical to the golden exhaustive scorer, at several
-    doc-group fan values (pass-through, split, and mixed routing)."""
+    doc-group fan values (pass-through, split, and mixed routing). The
+    kernel follows the batch size: QUERIES alone stays under
+    MATRIX_SCORE_MIN_QUERIES (TAAT); QUERIES plus the same texts under
+    fresh qids reaches it (matrix)."""
+    from tiny_search_engine_spark.query import MATRIX_SCORE_MIN_QUERIES
+    from tiny_search_engine_spark.tokenizer import tokenize_with_stats
+
+    shift = 1000
+    batch = list(QUERIES)
+    if mode == "matrix":
+        batch += [(qid + shift, q) for qid, q in QUERIES]
+    non_empty = sum(1 for _, q in batch if tokenize_with_stats(q, "code")[2])
+    assert (non_empty >= MATRIX_SCORE_MIN_QUERIES) == (mode == "matrix")
+    cfg = QueryConfig(profile="standard", compat="fixed")
+    want = _golden_topk(tiny_golden, cfg)
     for fan in (1, 4, 16):
-        cfg = QueryConfig(
-            profile="standard", compat="fixed", batch_score=mode, query_doc_fan=fan
+        eng = QueryEngine(
+            spark, tiny_store,
+            QueryConfig(profile="standard", compat="fixed", query_doc_fan=fan),
         )
-        eng = QueryEngine(spark, tiny_store, cfg)
-        got = _spark_topk(eng.wand_topk(QUERIES), "bm25")
-        want = _golden_topk(tiny_golden, cfg)
-        for qid, _q in QUERIES:
+        got = _spark_topk(eng.wand_topk(batch), "bm25")
+        for qid, _q in batch:
             assert_ranked_equal(
-                got.get(qid, []), want.get(qid, []), ctx=f"fan{fan} q{qid} ({_q!r})"
+                got.get(qid, []), want.get(qid % shift, []),
+                ctx=f"{mode} fan{fan} q{qid} ({_q!r})",
             )
 
 

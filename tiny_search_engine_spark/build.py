@@ -117,7 +117,7 @@ class SegmentStore:
         return spark.read.parquet(self.docs_raw_path)
 
     def doc_stats(self, spark: SparkSession) -> DataFrame:
-        return self._forward(spark, "doc_stats", self.doc_stats_path)
+        return spark.read.parquet(self.doc_stats_path)
 
     def docs(self, spark: SparkSession) -> DataFrame:
         """Forward-table view: id-map ⋈ per-doc stats (inner join drops
@@ -126,24 +126,11 @@ class SegmentStore:
         need stats should read ``doc_stats`` directly."""
         return self.docs_raw(spark).join(self.doc_stats(spark), "doc_id")
 
-    def _forward(self, spark: SparkSession, name: str, path: str) -> DataFrame:
-        """Read a forward-side table: the doc_id-bucketed catalog table
-        when this store was built with BuildConfig.bucket_tables (the
-        scan then reports hash partitioning → doc_id-keyed joins/windows
-        go exchange-free), else the plain parquet dir."""
-        try:
-            n = int(self.meta().get("bucket_tables", 0) or 0)
-        except (FileNotFoundError, json.JSONDecodeError, ValueError):
-            n = 0
-        if n > 0:
-            return _register_bucketed(spark, self.root, name, path, n)
-        return spark.read.parquet(path)
-
     def tokens(self, spark: SparkSession) -> DataFrame:
-        return self._forward(spark, "tokens", self.tokens_path)
+        return spark.read.parquet(self.tokens_path)
 
     def doc_term(self, spark: SparkSession) -> DataFrame:
-        return self._forward(spark, "doc_term", self.doc_term_path)
+        return spark.read.parquet(self.doc_term_path)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.term_stats_path)
@@ -156,144 +143,11 @@ def _stage_done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _store_db(spark: SparkSession, root: str) -> str:
-    """Per-store catalog database rooted AT the store directory, so
-    bucketed forward tables (BuildConfig.bucket_tables) land in the same
-    ``<root>/<name>`` dirs plain parquet writes use — a store is one
-    self-contained directory either way. The db name is content-free
-    (path hash) so two stores never collide in a shared session."""
-    import hashlib
-
-    root = os.path.abspath(root)
-    token = hashlib.md5(root.encode()).hexdigest()[:10]
-    db = f"tse_store_{token}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{root}'")
-    return db
-
-
-def _bucket_ids_on_disk(path: str) -> list[int] | None:
-    """Bucket ids encoded in the parquet file names under *path*
-    (Spark names bucketed outputs ``part-...-<uuid>_NNNNN.cXXX...``;
-    plain writes carry no ``_NNNNN`` suffix). Returns None when the
-    directory has no parquet files yet (nothing to cross-check)."""
-    import re
-
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return None
-    ids: list[int] = []
-    seen_parquet = False
-    for nm in names:
-        if not nm.endswith(".parquet") or nm.startswith(("_", ".")):
-            continue
-        seen_parquet = True
-        m = re.search(r"_(\d{5})\.c\d+", nm)
-        ids.append(int(m.group(1)) if m else -1)
-    return ids if seen_parquet else None
-
-
-def _register_bucketed(
-    spark: SparkSession, root: str, name: str, path: str, n_buckets: int
-) -> DataFrame:
-    """Re-register (idempotently) a bucketed forward table written by a
-    previous session and return it. Spark's bucket layout is just file
-    naming + catalog metadata, so an EXTERNAL ``CLUSTERED BY`` table
-    over the existing files restores the scan-reports-hash-partitioning
-    property that makes doc_id-keyed joins/windows exchange-free
-    (prototype-pinned in tests/test_fast_build.py)."""
-    # files-vs-spec cross-check: a bucketed scan materializes exactly
-    # n_buckets partitions from the FILENAME bucket ids, so a file with
-    # no bucket id (plain write) or id >= n_buckets (written under a
-    # larger N) would be silently dropped from every downstream
-    # join/query — refuse the registration instead of losing rows
-    ids = _bucket_ids_on_disk(path)
-    if ids is not None:
-        if any(i < 0 for i in ids):
-            raise ValueError(
-                f"{path}: parquet files carry no bucket id — the store was "
-                f"not written with bucket_tables={n_buckets}; rebuild with "
-                "resume=False or register without bucket_tables"
-            )
-        if ids and max(ids) >= int(n_buckets):
-            raise ValueError(
-                f"{path}: files are bucketed into >= {max(ids) + 1} buckets "
-                f"but the requested spec says {n_buckets} — a bucketed scan "
-                "would silently drop the higher-id files; use the bucket "
-                "count the store was built with"
-            )
-    # filename ids can't catch the SMALLER-N case (files written with
-    # N=4 under a spec of 8 all have ids < 8, but hold hash%4 rows that
-    # a hash%8 scan would mis-join silently) — the stage lineage records
-    # the true bucket count since round 5; cross-check when present
-    lin_path = os.path.join(root, "lineage", f"{name}.json")
-    try:
-        with open(lin_path) as fh:
-            lin_bt = int(json.load(fh).get("bucket_tables"))
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        lin_bt = None
-    if lin_bt is not None and lin_bt != int(n_buckets):
-        raise ValueError(
-            f"{path}: stage lineage says the files were written with "
-            f"bucket_tables={lin_bt} but the requested registration says "
-            f"{n_buckets} — a mismatched bucket spec silently mis-joins "
-            "rows; use the recorded count"
-        )
-    db = _store_db(spark, root)
-    # the bucket count is part of the registration NAME: a store rebuilt
-    # (possibly by another process) with a different bucket_tables N then
-    # resolves to a different table instead of reusing a stale spec —
-    # a wrong bucket spec would let joins skip exchanges the files don't
-    # satisfy and silently drop rows, and fixing it in place would need
-    # a DROP that deletes files when the build session's table is
-    # MANAGED. Stale old-N registrations linger harmlessly.
-    full = f"{db}.{name}_b{int(n_buckets)}"
-    if spark.catalog.tableExists(full):
-        # may predate a same-N rebuild of the dir — refresh file listing
-        spark.sql(f"REFRESH TABLE {full}")
-    else:
-        schema = spark.read.parquet(path).schema
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {full} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO {int(n_buckets)} BUCKETS "
-            f"LOCATION '{os.path.abspath(path)}'"
-        )
-    return spark.table(full)
-
-
 def _write_lineage(store: SegmentStore, stage: str, payload: dict) -> None:
     os.makedirs(store.lineage_path, exist_ok=True)
     payload = {"stage": stage, "written_at": _utcnow(), **payload}
     with open(os.path.join(store.lineage_path, f"{stage}.json"), "w") as f:
         json.dump(payload, f, indent=2, default=str)
-
-
-def _prior_bucket_tables(store: SegmentStore) -> int | None:
-    """Bucket layout a partially- or fully-built store on disk was
-    written with: meta.json if the build completed, else the newest
-    forward-stage lineage that recorded one. None = no prior evidence
-    (fresh dir, or a pre-lineage store — callers then fall back to the
-    filename cross-check in _register_bucketed)."""
-    try:
-        return int(store.meta().get("bucket_tables", 0) or 0)
-    except (FileNotFoundError, json.JSONDecodeError, ValueError, TypeError):
-        pass
-    for stage in ("doc_term", "tokens", "doc_stats"):
-        p = os.path.join(store.lineage_path, f"{stage}.json")
-        try:
-            with open(p) as f:
-                payload = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            continue
-        if "bucket_tables" in payload:
-            try:
-                return int(payload["bucket_tables"] or 0)
-            except (ValueError, TypeError):
-                continue
-    return None
 
 
 POSTINGS_SCHEMA = (
@@ -426,22 +280,6 @@ def build_index(
     # build+query session alternates explicitly
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     store = SegmentStore(out_dir)
-    # resume-vs-layout guard: resume skips any stage with a _SUCCESS
-    # marker, so resuming an existing store under a DIFFERENT
-    # bucket_tables would stamp the new N into meta over files bucketed
-    # (or not) for the old one — and a bucketed scan then silently drops
-    # every file whose filename bucket id >= N (row loss downstream), or
-    # dies on 'Invalid bucket file' for a plain store. Changing layout
-    # is a rebuild, not a resume: require resume=False (--no-resume).
-    if resume:
-        prior_bt = _prior_bucket_tables(store)
-        if prior_bt is not None and int(prior_bt) != int(cfg.bucket_tables or 0):
-            raise ValueError(
-                f"store at {out_dir} was built with bucket_tables={prior_bt} "
-                f"but this resume requests bucket_tables={int(cfg.bucket_tables or 0)}; "
-                "resuming cannot change the bucket layout — pass the prior "
-                "value, or rebuild from scratch with resume=False (--no-resume)"
-            )
     os.makedirs(out_dir, exist_ok=True)
     t_start = time.time()
     stage_seconds: dict[str, float] = {}
@@ -460,35 +298,6 @@ def build_index(
             .select(F.xxhash64(F.lower("term")).alias("term_sign"))
             .distinct()
         )
-
-    # forward-table write/read seam: plain parquet dirs, or (when
-    # cfg.bucket_tables) doc_id-bucketed tables in the SAME dirs —
-    # downstream doc_id-keyed joins/windows then plan without exchanges
-    def _write_forward(df: DataFrame, name: str, path: str) -> None:
-        if cfg.bucket_tables:
-            db = _store_db(spark, store.root)
-            (
-                df.write.format("parquet").mode("overwrite")
-                .bucketBy(int(cfg.bucket_tables), "doc_id")
-                .sortBy("doc_id")
-                # bucket count in the table NAME (matching
-                # _register_bucketed — a rebuild with a different N is a
-                # different registration) while the explicit path keeps
-                # the files in the store's canonical <root>/<name> dir;
-                # the explicit path also makes the table EXTERNAL, so no
-                # catalog operation can ever delete store files
-                .option("path", path)
-                .saveAsTable(f"{db}.{name}_b{int(cfg.bucket_tables)}")
-            )
-        else:
-            df.write.mode("overwrite").parquet(path)
-
-    def _read_forward(name: str, path: str) -> DataFrame:
-        if cfg.bucket_tables:
-            return _register_bucketed(
-                spark, store.root, name, path, cfg.bucket_tables
-            )
-        return spark.read.parquet(path)
 
     # Independent stages run CONCURRENTLY (two threads submitting Spark
     # actions): docs_raw ∥ tokens→doc_term, then doc_stats ∥ postings.
@@ -538,9 +347,9 @@ def build_index(
                 .mapInPandas(tok_fn, "doc_id long, pos int, term string, offset int, length int, dup int")
                 .withColumn("term_sign", F.xxhash64(F.lower(F.col("term"))))
             )
-            _write_forward(tokens, "tokens", store.tokens_path)
-            _write_lineage(store, "tokens", {"tokenizer": cfg.tokenizer, "bucket_tables": int(cfg.bucket_tables or 0)})
-        return _read_forward("tokens", store.tokens_path)
+            tokens.write.mode("overwrite").parquet(store.tokens_path)
+            _write_lineage(store, "tokens", {"tokenizer": cfg.tokenizer})
+        return spark.read.parquet(store.tokens_path)
 
     def job_doc_term() -> tuple[DataFrame, int | None]:
         tokens = _timed("tokens", job_tokens)
@@ -602,39 +411,23 @@ def build_index(
             # N (forward-table size = docs with >=1 token, table.cpp:270)
             # rides the write via observe(): exactly one doc_term row per
             # doc has first_idx == 0 (the term at token position 0) — no
-            # separate distinct-count job over the table.
-            if cfg.cache_doc_term and not cfg.bucket_tables:
-                # bucketed mode re-reads the written table below (its scan
-                # carries the hash partitioning) — persisting the
-                # pre-write lineage would only cache a dead plan
-                doc_term = doc_term.persist()
+            # separate distinct-count job over the table. doc_term is
+            # persisted (MEMORY_AND_DISK, spills when it outgrows executor
+            # memory) for its three consumer stages instead of re-reading
+            # the parquet it just wrote.
+            doc_term = doc_term.persist()
             obs = Observation("doc_term_metrics")
-            _write_forward(
-                doc_term.observe(
-                    obs, F.sum((F.col("first_idx") == 0).cast("long")).alias("n_docs")
-                ),
-                "doc_term",
-                store.doc_term_path,
-            )
+            doc_term.observe(
+                obs, F.sum((F.col("first_idx") == 0).cast("long")).alias("n_docs")
+            ).write.mode("overwrite").parquet(store.doc_term_path)
             n_docs = int(obs.get["n_docs"] or 0)
             _write_lineage(
                 store,
                 "doc_term",
-                {
-                    "fused_tokenize": tokens is None,
-                    "n_docs": n_docs,
-                    "bucket_tables": int(cfg.bucket_tables or 0),
-                },
+                {"fused_tokenize": tokens is None, "n_docs": n_docs},
             )
-            if cfg.bucket_tables:
-                # hand downstream the bucketed READ (scan reports doc_id
-                # hash partitioning → the doc_stats groupBy plans without
-                # an exchange), not the unpartitioned in-memory lineage
-                doc_term = _read_forward("doc_term", store.doc_term_path)
-                if cfg.cache_doc_term:
-                    doc_term = doc_term.persist()
             return doc_term, n_docs
-        return _read_forward("doc_term", store.doc_term_path), None
+        return spark.read.parquet(store.doc_term_path), None
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -736,11 +529,11 @@ def build_index(
             doc_stats = doc_stats.observe(
                 obs_ds, F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("dl")
             )
-            _write_forward(doc_stats, "doc_stats", store.doc_stats_path)
+            doc_stats.write.mode("overwrite").parquet(store.doc_stats_path)
             got = obs_ds.get
             stats_n = int(got["n"] or 0)
             avg_doc_len = float(got["dl"] or 0) / max(stats_n, 1)
-            _write_lineage(store, "doc_stats", {"n_docs": stats_n, "avg_doc_len": avg_doc_len, "bucket_tables": int(cfg.bucket_tables or 0)})
+            _write_lineage(store, "doc_stats", {"n_docs": stats_n, "avg_doc_len": avg_doc_len})
         else:
             lin = os.path.join(store.lineage_path, "doc_stats.json")
             if os.path.exists(lin):
@@ -871,8 +664,7 @@ def build_index(
         fut_ts.result()
     if ts_needs_write:
         term_stats.unpersist()
-    if cfg.cache_doc_term:
-        doc_term.unpersist()
+    doc_term.unpersist()
 
     # ---- meta (from observed doc_stats aggregates — no extra job) ----
     n_docs = stats_n
@@ -884,7 +676,6 @@ def build_index(
         "block_size": cfg.block_size,
         "postings_per_shard": cfg.postings_per_shard,
         "stopwords": stop_terms,
-        "bucket_tables": cfg.bucket_tables,
         "write_tokens": cfg.write_tokens,
         "copy_content": cfg.copy_content,
         "built_at": _utcnow(),
@@ -1024,7 +815,6 @@ def _write_pruned_store(
             **provenance,
             "n_docs": int(meta["n_docs"]),
             "fused_tokenize": False,
-            "bucket_tables": 0,
         },
     )
     cfg = BuildConfig(

@@ -93,22 +93,6 @@ class BuildConfig:
     # computed-but-unused GlobalTermInfo adjacency slot
     # (/root/reference/src/segment.cpp:84-99); opt-in, nothing reads it
     write_pre_term_sign: bool = False
-    # persist doc_term (MEMORY_AND_DISK) across its three consumer stages
-    # instead of re-reading the parquet it just wrote; spills gracefully
-    # when it outgrows executor memory
-    cache_doc_term: bool = True
-    # forward-side table layout: 0 = plain parquet dirs (default);
-    # N > 0 = write doc_term / doc_stats / tokens as hash-BUCKETED
-    # tables on doc_id (N buckets, bucket-sorted), the declarative
-    # co-located-join layout pipeline.layout.write_bucketed provides for
-    # corpus tables, wired into the segment store itself. Every
-    # doc_id-keyed join/groupBy/window the exact query paths run per
-    # batch (records window, doc_stats join, candidate-doc semi-joins)
-    # then plans WITHOUT a shuffle exchange — the scan reports hash
-    # partitioning. Readers re-register the external bucketed tables per
-    # session (SegmentStore._bucketed_table); production = Iceberg
-    # bucket(N, doc_id) partition transforms.
-    bucket_tables: int = 0
 
 
 @dataclass
@@ -134,11 +118,6 @@ class QueryConfig:
     # local[8]). Build jobs re-enable AQE (build_index) — coalescing and
     # skew-join belts matter there. None = leave the session alone.
     disable_aqe: bool | None = True
-    # batch scorer within each doc group: 'matrix' (one sparse
-    # queries×terms · terms×docs product — C-speed, exhaustive),
-    # 'taat' (per-query block-max-pruned term-at-a-time), or 'auto'
-    # (matrix for batches ≥ 32 queries). Both exact.
-    batch_score: str = "auto"
     # WAND batch doc-group fan (pow2). None → ~2× defaultParallelism.
     # Posting slices are routed/split to this many doc-range groups and
     # each group scores the whole query batch (query.py wand_topk).

@@ -134,9 +134,6 @@ def main_build(argv: list[str]) -> int:
     p.add_argument("--copy-content", action="store_true", help="copy content into the store (default: id-map only)")
     p.add_argument("--block-size", type=int, default=128)
     p.add_argument("--postings-per-shard", type=int, default=1 << 20)
-    p.add_argument("--bucket-tables", type=int, default=0,
-                   help="write forward tables doc_id-bucketed into N buckets "
-                        "(exchange-free doc-side joins at query time; 0 = plain parquet)")
     p.add_argument("--verify-sha256", action="store_true", help="re-scan the source and assert per-row content sha256 equality")
     a = p.parse_args(argv)
 
@@ -153,7 +150,6 @@ def main_build(argv: list[str]) -> int:
         copy_content=a.copy_content,
         block_size=a.block_size,
         postings_per_shard=a.postings_per_shard,
-        bucket_tables=a.bucket_tables,
     )
     store = build_index(spark, src, a.out, cfg, resume=not a.no_resume)
     meta = store.meta()

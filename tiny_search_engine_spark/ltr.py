@@ -332,7 +332,11 @@ def rerank(
     top-k), the reference's rank path with the model enabled
     (table.cpp:669-691). *df* needs (query_id, doc_id, features_col:
     map<string,double>); the model and id map ship as task-broadcast
-    closure state, predictions run batch-per-Arrow-chunk."""
+    closure state, predictions run batch-per-Arrow-chunk.
+
+    A feature whose key is absent, whose value is null, or whose value is
+    an explicit NaN is scored as 0.0 — the model's missing default — so
+    a NaN feature and a missing key give the same ``final_score``."""
     ids = ids or load_feature_conf()
     n = max(ids.values()) + 1 if ids else 0
 

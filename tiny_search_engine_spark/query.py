@@ -44,6 +44,12 @@ from .config import BM25_PROFILES, QueryConfig
 from .hashing import term_sign
 from .tokenizer import text_len, tokenize_with_stats
 
+# wand_topk's per-doc-group batch scorer: batches of at least this many
+# non-empty queries use the sparse queries×terms · terms×docs product
+# (_score_batch_matrix — C-speed, exhaustive); smaller ones use per-query
+# block-max-pruned term-at-a-time (_score_batch_taat). Both are exact.
+MATRIX_SCORE_MIN_QUERIES = 32
+
 
 def _in_expr(col: str, values: list[int]) -> F.Column:
     """``col IN (v1, v2, ...)`` as ONE parsed SQL expression.
@@ -656,9 +662,7 @@ class QueryEngine:
         kk = k
         qb = spark.sparkContext.broadcast(qdict)
 
-        use_matrix = self.cfg.batch_score == "matrix" or (
-            self.cfg.batch_score == "auto" and len(qdict) >= 32
-        )
+        use_matrix = len(qdict) >= MATRIX_SCORE_MIN_QUERIES
 
         def score_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
             # decode every routed slice ONCE; tf-part of BM25 and its upper

@@ -18,6 +18,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local-mode cores: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on (its affinity mask, which a container's cpuset
+    narrows — not the host's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEMORY`` when set, else a quarter of
+    physical RAM, capped at 8 GiB with a 1 GiB floor — room is left for
+    the Python workers and the OS page cache the parquet stores live in."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1024, min(8192, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "tiny_search_engine_spark",
     master: str | None = None,
@@ -39,7 +58,7 @@ def get_spark(
         local_dir = "/dev/shm/tse_spark_local"
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (
@@ -50,7 +69,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # explicit skew handling is ours (doc-sharding); AQE's is belt+braces
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
