@@ -60,8 +60,7 @@ def main():
     # data-dependent oracles (trained-codebook literals) must be
     # generated for the SAME sf dir this compare runs at
     os.environ["TSE_ORACLE_SF_DIR"] = sf_dir
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      extra_conf={"spark.driver.memory": "8g"})
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

@@ -29,12 +29,7 @@ from tiny_search_engine_spark.session import get_spark
 
 def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/tmp/tse_ndcg_mp"
-    spark = get_spark(
-        app_name="ndcg_mp_experiment",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
-        shuffle_partitions=16,
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    spark = get_spark(app_name="ndcg_mp_experiment")
     store_search = re_.build_reference_store(
         spark, os.path.join(base, "store_search"), use_stopwords=True
     )

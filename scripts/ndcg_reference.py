@@ -22,12 +22,7 @@ from tiny_search_engine_spark.session import get_spark
 
 def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/tmp/tse_ndcg_ref"
-    spark = get_spark(
-        app_name="ndcg_reference",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
-        shuffle_partitions=16,
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    spark = get_spark(app_name="ndcg_reference")
     store_stop = re_.build_reference_store(
         spark, os.path.join(base, "store_stop"), use_stopwords=True
     )

@@ -27,7 +27,7 @@ def main() -> None:
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
-    spark = get_spark(app_name="plan_report", master="local[4]", shuffle_partitions=8)
+    spark = get_spark(app_name="plan_report")
     rows = []
     for name, fn in sorted(m.queries().items()):
         try:

@@ -874,16 +874,13 @@ def test_pruned_store_wand_beats_full_on_zipf(spark, zipf_docs, tmp_path):
     assert len(f & p) / len(f) >= 0.4
 
 
-def test_tiered_wand_topk_store_level(spark, zipf_docs, tmp_path):
-    """query.tiered_wand_topk — the production composition of
-    prune_store and WAND: tail-certificate queries are served from the
-    compacted store BIT-IDENTICALLY to full-store WAND, hot-term
-    queries fall back, and the merged output equals full-store WAND for
-    EVERY query (store twin of retrieval.tiered_topk's contract)."""
+@pytest.fixture(scope="module")
+def tiered_stores(spark, tmp_path_factory):
+    """A full ws-tokenized store over a Zipf corpus, its prune_store at
+    m=50, and the full store's df per term: (full, pruned, m, dfs)."""
     from tiny_search_engine_spark.build import BuildConfig, build_index, prune_store
-    from tiny_search_engine_spark.config import QueryConfig
-    from tiny_search_engine_spark.query import QueryEngine, tiered_wand_topk
 
+    tmp = tmp_path_factory.mktemp("tiered")
     rows = [
         (f"r{i // 50}", f"f{i}.txt", "c0", "code", t)
         for i, t in enumerate(_zipf_texts(seed=23))
@@ -893,19 +890,53 @@ def test_tiered_wand_topk_store_level(spark, zipf_docs, tmp_path):
     )
     m = 50
     full = build_index(
-        spark, src, str(tmp_path / "full"),
+        spark, src, str(tmp / "full"),
         BuildConfig(tokenizer="ws", write_tokens=False),
     )
-    pruned = prune_store(spark, full, str(tmp_path / "pruned"), m=m)
+    pruned = prune_store(spark, full, str(tmp / "pruned"), m=m)
     dfs = {
         r["term"]: r["df"]
         for r in full.term_stats(spark).select("term", "df").collect()
     }
+    return full, pruned, m, dfs
+
+
+def _tiered_batches(dfs: dict, m: int) -> dict:
+    """Named query batches over the tiered_stores corpus."""
     tail = sorted(t for t, n in dfs.items() if 2 <= n <= m)
     head = sorted(t for t, n in dfs.items() if n > m)
-    queries = [(i, f"{tail[3 * i]} {tail[3 * i + 1]}") for i in range(16)]
-    queries += [(100 + i, f"{head[i % len(head)]} {tail[60 + i]}") for i in range(4)]
-    queries.append((200, "zz_absent_term"))  # absent terms: tier-1 trivially
+    cold = [(i, f"{tail[3 * i]} {tail[3 * i + 1]}") for i in range(16)]
+    hot = [(100 + i, f"{head[i % len(head)]} {tail[60 + i]}") for i in range(4)]
+    return {
+        "all_tier1": cold,
+        "all_fallback": hot,
+        "mixed": cold + hot + [(200, "zz_absent_term")],
+        "empty_or_absent": [(300, ""), (301, "zz_absent_term"), (302, "   ")],
+        # the last text with terms decides a qid's tier and its terms
+        "dup_qid": [(400, hot[0][1]), (400, cold[0][1]),
+                    (401, cold[1][1]), (401, hot[1][1]), (402, cold[2][1]),
+                    (403, hot[2][1]), (403, "")],
+    }
+
+
+def _rows_by_rank(rows) -> dict:
+    return {
+        (r["query_id"], r["rank"]): (r["doc_id"], round(r["bm25"], 9))
+        for r in rows
+    }
+
+
+def test_tiered_wand_topk_store_level(spark, tiered_stores):
+    """query.tiered_wand_topk — the production composition of
+    prune_store and WAND: tail-certificate queries are served from the
+    compacted store BIT-IDENTICALLY to full-store WAND, hot-term
+    queries fall back, and the merged output equals full-store WAND for
+    EVERY query (store twin of retrieval.tiered_topk's contract)."""
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import QueryEngine, tiered_wand_topk
+
+    full, pruned, m, dfs = tiered_stores
+    queries = _tiered_batches(dfs, m)["mixed"]
     cfg = QueryConfig(profile="standard", compat="fixed")
     got = tiered_wand_topk(spark, full, pruned, queries, k=10, cfg=cfg).collect()
     flags = {}
@@ -918,18 +949,156 @@ def test_tiered_wand_topk_store_level(spark, zipf_docs, tmp_path):
     for qid in range(100, 104):
         assert flags[qid] == {False}, qid
     # the merged output IS full-store WAND, row for row
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["bm25"], 9))
-        for r in QueryEngine(spark, full, cfg).wand_topk(queries, k=10).collect()
-    }
-    have = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["bm25"], 9))
-        for r in got
-    }
-    assert have == want
+    want = _rows_by_rank(QueryEngine(spark, full, cfg).wand_topk(queries, k=10).collect())
+    assert _rows_by_rank(got) == want
     # a non-pruned store is rejected (no prune_m lineage)
     with pytest.raises(ValueError, match="prune_m"):
         tiered_wand_topk(spark, full, full, queries, k=10, cfg=cfg)
+
+
+def test_batch_fan_follows_posting_volume(spark):
+    """tiered_wand_topk's fan: one doc group per POSTINGS_PER_DOC_GROUP
+    postings of the batch's terms, pow2, capped at the session fan."""
+    from tiny_search_engine_spark.query import (
+        POSTINGS_PER_DOC_GROUP as C,
+        _batch_fan,
+        _session_fan,
+    )
+
+    cap = _session_fan(spark)
+    assert [_batch_fan(spark, n) for n in (0, 1, C)] == [1, 1, 1]
+    assert [_batch_fan(spark, n) for n in (C + 1, 2 * C, 2 * C + 1)] == [2, 2, 4]
+    assert _batch_fan(spark, 1000 * C) == cap == 8  # local[4]
+
+
+@pytest.mark.parametrize("fan", [1, 2, 8, None])
+def test_tiered_wand_topk_parity_across_fans_and_batches(spark, tiered_stores, fan):
+    """Both tiers run as one plan: at every doc-group fan (None = sized to
+    the batch) and for every batch shape, the rows equal full-store
+    wand_topk row for row, and each query's tier1 flag is the df ≤ m
+    certificate of its last text with terms."""
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import QueryEngine, tiered_wand_topk
+    from tiny_search_engine_spark.tokenizer import tokenize_with_stats
+
+    full, pruned, m, dfs = tiered_stores
+    df_by_sign = {
+        r["term_sign"]: r["df"]
+        for r in full.term_stats(spark).select("term_sign", "df").collect()
+    }
+    base = QueryConfig(profile="standard", compat="fixed")
+    cfg = QueryConfig(profile="standard", compat="fixed", query_doc_fan=fan)
+    for name, queries in _tiered_batches(dfs, m).items():
+        got = tiered_wand_topk(spark, full, pruned, queries, k=10, cfg=cfg).collect()
+        want = QueryEngine(spark, full, base).wand_topk(queries, k=10).collect()
+        assert _rows_by_rank(got) == _rows_by_rank(want), name
+        last = {}
+        for qid, q in queries:
+            if tokenize_with_stats(q, "ws")[2] or qid not in last:
+                last[qid] = q
+        cert = {
+            qid: all(df_by_sign.get(s, 0) <= m for s in tokenize_with_stats(q, "ws")[2])
+            for qid, q in last.items()
+        }
+        for r in got:
+            assert r["tier1"] == cert[r["query_id"]], (name, r["query_id"])
+        if name == "empty_or_absent":
+            assert got == []
+        if name == "dup_qid":
+            assert cert == {400: True, 401: False, 402: True, 403: False}
+            assert {r["query_id"] for r in got} == {400, 401, 402, 403}
+
+
+def test_tiered_wand_topk_opens_stores_once(spark, tiered_stores):
+    """A second tiered call on the same SegmentStore objects reuses their
+    opened tables: it submits fewer Spark jobs than the first (no file
+    listing or schema job), and returns the same rows."""
+    from tiny_search_engine_spark.build import SegmentStore
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import tiered_wand_topk
+
+    full0, pruned0, m, dfs = tiered_stores
+    full, pruned = SegmentStore(full0.root), SegmentStore(pruned0.root)
+    queries = _tiered_batches(dfs, m)["mixed"]
+    cfg = QueryConfig(profile="standard", compat="fixed")
+    sc = spark.sparkContext
+    jobs, rows = [], []
+    try:
+        for call in ("first", "second"):
+            sc.setJobGroup(f"tiered-open-{call}", call)
+            rows.append(tiered_wand_topk(spark, full, pruned, queries, k=10, cfg=cfg).collect())
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"tiered-open-{call}")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[1] < jobs[0], jobs
+    assert _rows_by_rank(rows[0]) == _rows_by_rank(rows[1])
+
+
+def test_segment_store_opened_sees_rebuilt_table(spark, tmp_path):
+    """A held SegmentStore whose tables are rebuilt into the same root
+    reads the new rows through opened(), not a stale file index."""
+    import shutil
+
+    from tiny_search_engine_spark.build import BuildConfig, SegmentStore, build_index
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import QueryEngine
+
+    root = str(tmp_path / "store")
+    cfg = BuildConfig(tokenizer="ws", write_tokens=False)
+
+    def build(texts):
+        shutil.rmtree(root, ignore_errors=True)
+        src = spark.createDataFrame(
+            [("r", f"f{i}", "c", "code", t) for i, t in enumerate(texts)],
+            "repo string, path string, commit string, lang string, content string",
+        )
+        build_index(spark, src, root, cfg)
+
+    def terms(df):
+        return sorted(r["term"] for r in df.select("term").collect())
+
+    build(["alpha beta", "beta gamma"])
+    held = SegmentStore(root)
+    assert terms(held.opened(spark, "term_stats")) == ["alpha", "beta", "gamma"]
+    qcfg = QueryConfig(profile="standard", compat="fixed")
+    assert QueryEngine(spark, held, qcfg).wand_topk([(0, "delta")], k=5).collect() == []
+    build(["delta epsilon", "zeta eta", "theta"])
+    assert terms(held.opened(spark, "term_stats")) == [
+        "delta", "epsilon", "eta", "theta", "zeta"
+    ]
+    got = QueryEngine(spark, held, qcfg).wand_topk([(0, "delta")], k=5).collect()
+    fresh = QueryEngine(spark, SegmentStore(root), qcfg).wand_topk([(0, "delta")], k=5)
+    assert len(got) == 1
+    assert _rows_by_rank(got) == _rows_by_rank(fresh.collect())
+
+
+def test_wand_reads_pre_v2_store_without_idf(spark, tiered_stores, tmp_path):
+    """A store whose postings have no idf column (written before idf
+    moved into the posting rows) is scored through the broadcast
+    term_stats idf join: wand_topk, and tiered_wand_topk with it as the
+    full tier, return the same rows as on the original store."""
+    import shutil
+
+    from tiny_search_engine_spark.build import SegmentStore
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import QueryEngine, tiered_wand_topk
+
+    full, pruned, m, dfs = tiered_stores
+    old = SegmentStore(str(tmp_path / "pre_v2"))
+    shutil.copytree(full.root, old.root)
+    shutil.rmtree(old.postings_path)
+    full.postings(spark).drop("idf").write.partitionBy("bucket").parquet(old.postings_path)
+    assert "idf" not in old.postings(spark).columns
+    cfg = QueryConfig(profile="standard", compat="fixed")
+    queries = _tiered_batches(dfs, m)["mixed"]
+    want = QueryEngine(spark, full, cfg).wand_topk(queries, k=10).collect()
+    got = QueryEngine(spark, old, cfg).wand_topk(queries, k=10).collect()
+    assert want and sorted(got) == sorted(want)
+    want_t = tiered_wand_topk(spark, full, pruned, queries, k=10, cfg=cfg).collect()
+    got_t = tiered_wand_topk(spark, old, pruned, queries, k=10, cfg=cfg).collect()
+    assert not all(r["tier1"] for r in want_t)  # the fallback tier is reached
+    assert sorted(got_t) == sorted(want_t)
 
 
 def test_prune_store_reuse_out_dir(spark, zipf_docs, tmp_path):

@@ -42,7 +42,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -73,9 +73,17 @@ class SegmentStore:
     id-map + per-row sha256 (+ content only when
     ``BuildConfig.copy_content``), ``doc_stats`` holds the per-doc scoring
     stats, and ``docs()`` is the lazy join view of the two — at 100 TB the
-    content bytes are written at most once and never shuffled."""
+    content bytes are written at most once and never shuffled.
+
+    The readers below list the table's files on every call (the 64-bucket
+    postings table costs a 64-task listing job and a schema job); build
+    and prune paths use them so each stage sees what is on disk now.
+    Serving uses ``opened``, which reads a table once per session and
+    directory version."""
 
     root: str
+    # table name -> (session, directory stamp, DataFrame); see opened()
+    _opened: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @property
     def docs_raw_path(self) -> str:
@@ -137,6 +145,27 @@ class SegmentStore:
 
     def postings(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.postings_path)
+
+    def opened(self, spark: SparkSession, name: str) -> DataFrame:
+        """Serving read of table *name* (``postings``, ``term_stats``, ...):
+        the DataFrame, with its file index, is kept per store and reused
+        while the session and the table directory stay the same. A table
+        rewritten into the same root replaces its directory (overwrite
+        deletes and recreates it, and the commit adds ``_SUCCESS``), which
+        changes the stamp, so a held store never reads a stale file
+        list."""
+        path = os.path.join(self.root, name)
+        try:
+            st = os.stat(path)
+        except OSError:  # absent table: let Spark raise its own error
+            return spark.read.parquet(path)
+        stamp = (st.st_ino, st.st_mtime_ns)
+        hit = self._opened.get(name)
+        if hit is not None and hit[0] is spark and hit[1] == stamp:
+            return hit[2]
+        df = spark.read.parquet(path)
+        self._opened[name] = (spark, stamp, df)
+        return df
 
 
 def _stage_done(path: str) -> bool:

@@ -38,8 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .build import SegmentStore
-from .compress import decode_posting
+from .build import POSTING_BUCKETS, SegmentStore
+from .compress import decode_posting, range_shard
 from .config import BM25_PROFILES, QueryConfig
 from .hashing import term_sign
 from .tokenizer import text_len, tokenize_with_stats
@@ -49,6 +49,15 @@ from .tokenizer import text_len, tokenize_with_stats
 # (_score_batch_matrix — C-speed, exhaustive); smaller ones use per-query
 # block-max-pruned term-at-a-time (_score_batch_taat). Both are exact.
 MATRIX_SCORE_MIN_QUERIES = 32
+
+# tiered_wand_topk's doc-group fan: one group per this many postings of
+# the batch's terms (Σ df), pow2, capped at wand_topk's session fan. A
+# group is one Python score task, whose fixed cost outweighs what a split
+# saves below about this many postings. Measured on 4 cores: up to Σ df
+# 65k one or two groups cost the least CPU at the same wall time, four
+# and eight up to twice as much; at 160-169k two groups were best; at
+# 416k four cut wall time by 17% for 10% more CPU.
+POSTINGS_PER_DOC_GROUP = 131072
 
 
 def _in_expr(col: str, values: list[int]) -> F.Column:
@@ -123,15 +132,15 @@ class QueryEngine:
             spark.conf.set(
                 "spark.sql.adaptive.enabled", str(not self.cfg.disable_aqe).lower()
             )
-        self._doc_term = None
-        # per-engine DataFrame cache: spark.read.parquet does schema/file
-        # listing work per call — pay it once per store, not per batch
-        self._df_cache: dict[str, DataFrame] = {}
 
     def _cached(self, name: str) -> DataFrame:
-        if name not in self._df_cache:
-            self._df_cache[name] = getattr(self.store, name)(self.spark)
-        return self._df_cache[name]
+        """Store table opened once per session (SegmentStore.opened):
+        spark.read.parquet lists files and reads a schema per call, so
+        engines on the same store share one open instead of paying it per
+        engine and batch."""
+        if name == "docs":  # SegmentStore.docs's join view, over opened tables
+            return self._cached("docs_raw").join(self._cached("doc_stats"), "doc_id")
+        return self.store.opened(self.spark, name)
 
     # ------------------------------------------------------------------
     # query-side prep (driver; query sets are small)
@@ -522,49 +531,78 @@ class QueryEngine:
         """Exact BM25 top-k via pruned evaluation of compressed postings
         (compat="fixed" semantics, no synonyms — the clean product path).
 
-        Batched doc-group dataflow (the 100 TB design): posting bytes are
-        shuffled ONCE per doc group — never per query — so shuffle volume
-        equals the pruned index-slice size, independent of batch size.
-
-        1. bucket-pruned postings scan (term_sign IN pushed to parquet)
-           ⋈ broadcast idf.
-        2. route/split (narrow ``mapInPandas``): pick a batch granularity
-           S (pow2, ~2× parallelism). A posting row with m doc-RANGE
-           shards (build.py job_postings) nests inside one fine group when
-           m ≥ S (gshard = shard·S/m, zero-copy pass-through); when m < S
-           it is decoded once and SLICED at the group boundaries
-           (range_shard is monotone in the sorted doc order →
-           searchsorted), each slice re-encoded — entry-exact routing, no
-           replication.
-        3. per-gshard ``applyInPandas``: decode each routed slice once,
-           then score ALL queries (broadcast {query_id: [(sign, tf_q)]})
-           against the group's term arrays with pruned TAAT; emit per-query
-           group-local top-k.
-        4. global window merge. Each doc lives in exactly one group, so
-           per-group top-k → global top-k is exact."""
+        The one-tier call of ``_wand_plan``, the batched doc-group
+        dataflow that tiered_wand_topk runs over both of its stores in one
+        plan. The fan is ``query_doc_fan``, else the session's
+        (``_session_fan``, ~2× defaultParallelism), whatever the batch."""
         k = k or self.cfg.k
-        spark = self.spark
-        prof = BM25_PROFILES[self.cfg.profile]
+        fan = self.cfg.query_doc_fan or _session_fan(self.spark)
+        return _wand_plan(self.spark, [(self, queries)], k, fan)
+
+
+def _session_fan(spark: SparkSession) -> int:
+    """Doc-group fan that keeps every core busy: ~2× defaultParallelism,
+    pow2 so the build's pow2 shard ranges nest."""
+    par = spark.sparkContext.defaultParallelism
+    return max(4, 1 << (2 * par - 1).bit_length())
+
+
+def _batch_fan(spark: SparkSession, n_postings: int) -> int:
+    """Doc-group fan sized to a batch's posting volume: one group per
+    POSTINGS_PER_DOC_GROUP matched postings, rounded up to a power of two
+    and capped at the session fan."""
+    groups = -(-n_postings // POSTINGS_PER_DOC_GROUP)
+    return min(_session_fan(spark), 1 << max(groups - 1, 0).bit_length())
+
+
+def _wand_plan(
+    spark: SparkSession,
+    tiers: list[tuple[QueryEngine, list[tuple[int, str]]]],
+    k: int,
+    S: int,
+) -> DataFrame:
+    """Batched doc-group WAND over one or more (engine, queries) tiers,
+    as ONE plan: (query_id, rank, doc_id, bm25). A query_id must appear
+    in one tier only.
+
+    Posting bytes are shuffled ONCE per doc group — never per query — so
+    shuffle volume equals the pruned index-slice size, independent of
+    batch size (the 100 TB design).
+
+    1. per tier, a bucket-pruned scan of its store's postings (term_sign
+       IN pushed to parquet) ⋈ broadcast idf for pre-v2 stores, tagged
+       with the tier; the tiers' scans are unioned.
+    2. route/split (narrow ``mapInPandas``) into S doc groups per tier,
+       gshard = tier·S + g. A posting row with m doc-RANGE shards
+       (build.py job_postings) nests inside one fine group when m ≥ S
+       (g = shard·S/m, zero-copy pass-through); when m < S it is decoded
+       once and SLICED at the group boundaries (range_shard is monotone
+       in the sorted doc order → searchsorted), each slice shipped as
+       raw fixed-width arrays — entry-exact routing, no replication.
+    3. per-gshard ``applyInPandas``: decode each routed slice once, then
+       score ALL of the tier's queries against the group's term arrays,
+       with one broadcast of per-tier (avg_dl, query dict, scorer, BM25
+       constants); emit per-query group-local top-k.
+    4. one global window merge. Each doc lives in exactly one group of
+       its tier, so per-group top-k → global top-k is exact."""
+    params, scans = [], []
+    for t, (eng, queries) in enumerate(tiers):
         # no weight fill: the WAND path needs only (sign, tf_q) per unique
         # query term — query prep is pure driver-side tokenization, zero
         # Spark jobs and no QueryInfo/synonym assembly. term_map keys are
         # in first-occurrence order and carry tf, which is exactly the
         # dup-skip + tf lookup the full path derives per occurrence.
         qdict: dict[int, list[tuple[int, int]]] = {}
-        signs_set: set[int] = set()
         for qid, q in queries:
-            _, _, tmap = tokenize_with_stats(q, self.mode)
-            if not tmap:
-                continue
-            qdict[qid] = [(s, ent[0]) for s, ent in tmap.items()]
-            signs_set.update(tmap.keys())
+            _, _, tmap = tokenize_with_stats(q, eng.mode)
+            if tmap:  # a later text of a qid replaces an earlier one
+                qdict[qid] = [(s, ent[0]) for s, ent in tmap.items()]
+        prof = BM25_PROFILES[eng.cfg.profile]
+        params.append((eng.avg_doc_len, qdict, len(qdict) >= MATRIX_SCORE_MIN_QUERIES,
+                       prof.k1, prof.k2, prof.b))
         if not qdict:
-            return spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, bm25 double"
-            )
-        from .build import POSTING_BUCKETS
-
-        signs = sorted(signs_set)
+            continue
+        signs = sorted({s for terms in qdict.values() for s, _ in terms})
         buckets = sorted({s % POSTING_BUCKETS for s in signs})
         # bucket list prunes parquet PARTITIONS; the IN on term_sign is
         # pushed into the scan for row-group skipping within buckets
@@ -572,144 +610,142 @@ class QueryEngine:
         # tight ranges). _in_expr, not Column.isin: isin costs one Py4J
         # literal round-trip per value — measured seconds of DRIVER time
         # per 1000-query batch, a fixed cost that caps batch scaling.
-        post = self._cached("postings").filter(
+        post = eng._cached("postings").filter(
             _in_expr("bucket", buckets) & _in_expr("term_sign", signs)
         )
         if "idf" not in post.columns:  # pre-v2 store: idf via broadcast join
-            ts = self._cached("term_stats").select("term_sign", "idf").filter(
+            ts = eng._cached("term_stats").select("term_sign", "idf").filter(
                 _in_expr("term_sign", signs)
             )
             post = post.join(F.broadcast(ts), "term_sign")
-        joined = post.select(
-            "term_sign", "shard", "n_shards", "idf",
+        scans.append(post.select(
+            F.lit(t).alias("tier"), "term_sign", "shard", "n_shards", "idf",
             "doc_bytes", "tf_bytes", "dl_bytes", "block_max_tf", "block_min_dl",
+        ))
+    if not scans:
+        return spark.createDataFrame(
+            [], "query_id long, rank int, doc_id long, bm25 double"
         )
+    joined = scans[0]
+    for p in scans[1:]:
+        joined = joined.union(p)
 
-        # batch doc-group granularity: enough groups to keep every core
-        # busy; pow2 so shard ranges nest (build-side n_shards are pow2)
-        par = spark.sparkContext.defaultParallelism
-        S = self.cfg.query_doc_fan or max(4, 1 << (2 * par - 1).bit_length())
+    ROUTED = (
+        "gshard int, term_sign long, idf double, raw boolean, "
+        "doc_bytes binary, tf_bytes binary, dl_bytes binary, "
+        "max_tf int, min_dl int"
+    )
 
-        from .compress import range_shard
+    def split_fn(batches):
+        for pdf in batches:
+            out = {c: [] for c in (
+                "gshard", "term_sign", "idf", "raw", "doc_bytes",
+                "tf_bytes", "dl_bytes", "max_tf", "min_dl")}
 
-        ROUTED = (
-            "gshard int, term_sign long, idf double, raw boolean, "
-            "doc_bytes binary, tf_bytes binary, dl_bytes binary, "
-            "max_tf int, min_dl int"
-        )
+            def emit(g, sign, idf, raw, db, tb, lb, mtf, mdl):
+                out["gshard"].append(g)
+                out["term_sign"].append(sign)
+                out["idf"].append(idf)
+                out["raw"].append(raw)
+                out["doc_bytes"].append(db)
+                out["tf_bytes"].append(tb)
+                out["dl_bytes"].append(lb)
+                out["max_tf"].append(mtf)
+                out["min_dl"].append(mdl)
 
-        def split_fn(batches):
-            for pdf in batches:
-                out = {c: [] for c in (
-                    "gshard", "term_sign", "idf", "raw", "doc_bytes",
-                    "tf_bytes", "dl_bytes", "max_tf", "min_dl")}
-
-                def emit(g, sign, idf, raw, db, tb, lb, mtf, mdl):
-                    out["gshard"].append(g)
-                    out["term_sign"].append(sign)
-                    out["idf"].append(idf)
-                    out["raw"].append(raw)
-                    out["doc_bytes"].append(db)
-                    out["tf_bytes"].append(tb)
-                    out["dl_bytes"].append(lb)
-                    out["max_tf"].append(mtf)
-                    out["min_dl"].append(mdl)
-
-                for r in pdf.itertuples():
-                    m = int(r.n_shards)
-                    if m >= S:
-                        # this shard's doc range nests inside one fine
-                        # group: varbyte bytes pass through zero-copy
-                        emit(int(r.shard) * S // m, int(r.term_sign),
-                             float(r.idf), False, r.doc_bytes, r.tf_bytes,
-                             r.dl_bytes, int(max(r.block_max_tf)),
-                             int(min(r.block_min_dl)))
-                        continue
-                    d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
-                    gs = range_shard(d, S)  # nondecreasing (docs sorted)
-                    cuts = np.flatnonzero(np.diff(gs)) + 1
-                    starts = np.concatenate(([0], cuts))
-                    ends = np.concatenate((cuts, [d.size]))
-                    # sliced rows ship RAW fixed-width bytes (int64 docs,
-                    # int32 tf/dl): ~16 B/entry vs varbyte's ~10 B, but no
-                    # per-slice varbyte encode (3 call-heavy encodes ×
-                    # O(rows·S) slices dominated this stage) and frombuffer
-                    # decode at the scorer is free
-                    t32 = t.astype(np.int32)
-                    dl32 = dl.astype(np.int32)
-                    sign_i = int(r.term_sign)
-                    idf_f = float(r.idf)
-                    for lo, hi in zip(starts, ends):
-                        emit(int(gs[lo]), sign_i, idf_f, True,
-                             d[lo:hi].tobytes(), t32[lo:hi].tobytes(),
-                             dl32[lo:hi].tobytes(),
-                             int(t32[lo:hi].max()), int(dl32[lo:hi].min()))
-                yield pd.DataFrame(out)
-
-        # split runs directly in the scan tasks: the postings table is 64
-        # bucket files that Spark bin-packs into ~defaultParallelism splits
-        # (maxSplitBytes = bytes/parallelism), and matched rows hash-spread
-        # across buckets, so decode/slice work distributes without a
-        # pre-shuffle. (A round-robin repartition here was measured as one
-        # full extra pass of the matched posting bytes through shuffle plus
-        # a stage barrier per batch — pure fixed cost.) A small scan can
-        # still collapse to 1-2 splits, but then the split work is small
-        # too; the heavy stage (score) is fanned by gshard regardless.
-        routed = joined.mapInPandas(split_fn, ROUTED)
-
-        k1, k2, b = prof.k1, prof.k2, prof.b
-        avg_dl = self.avg_doc_len
-        kk = k
-        qb = spark.sparkContext.broadcast(qdict)
-
-        use_matrix = len(qdict) >= MATRIX_SCORE_MIN_QUERIES
-
-        def score_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            # decode every routed slice ONCE; tf-part of BM25 and its upper
-            # bound are query-independent — computed per slice, reused by
-            # every query touching the term
-            termd: dict[int, list] = {}
             for r in pdf.itertuples():
-                if r.raw:
-                    d = np.frombuffer(r.doc_bytes, dtype=np.int64)
-                    t = np.frombuffer(r.tf_bytes, dtype=np.int32).astype(np.int64)
-                    dl = np.frombuffer(r.dl_bytes, dtype=np.int32).astype(np.int64)
-                else:
-                    d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
-                if d.size == 0:
+                base = int(r.tier) * S  # the tier's own gshard range
+                m = int(r.n_shards)
+                if m >= S:
+                    # this shard's doc range nests inside one fine
+                    # group: varbyte bytes pass through zero-copy
+                    emit(base + int(r.shard) * S // m, int(r.term_sign),
+                         float(r.idf), False, r.doc_bytes, r.tf_bytes,
+                         r.dl_bytes, int(max(r.block_max_tf)),
+                         int(min(r.block_min_dl)))
                     continue
-                kd = k1 * (1 - b + b * dl / avg_dl)
-                tfpart = t * (k1 + 1) / (t + kd)
-                mtf = float(r.max_tf)
-                ub_tf = mtf * (k1 + 1) / (mtf + k1 * (1 - b + b * float(r.min_dl) / avg_dl))
-                termd.setdefault(int(r.term_sign), []).append(
-                    (d, tfpart, ub_tf, float(r.idf))
-                )
-            if use_matrix:
-                out = _score_batch_matrix(termd, qb.value, k1, k2, kk)
-            else:
-                out = _score_batch_taat(termd, qb.value, k2, kk)
-            if out is None:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "bm25": []}).astype(
-                    {"query_id": "int64", "doc_id": "int64", "bm25": "float64"}
-                )
-            q, d, s = out
-            return pd.DataFrame({"query_id": q, "doc_id": d, "bm25": s})
+                d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
+                gs = range_shard(d, S)  # nondecreasing (docs sorted)
+                cuts = np.flatnonzero(np.diff(gs)) + 1
+                starts = np.concatenate(([0], cuts))
+                ends = np.concatenate((cuts, [d.size]))
+                # sliced rows ship RAW fixed-width bytes (int64 docs,
+                # int32 tf/dl): ~16 B/entry vs varbyte's ~10 B, but no
+                # per-slice varbyte encode (3 call-heavy encodes ×
+                # O(rows·S) slices dominated this stage) and frombuffer
+                # decode at the scorer is free
+                t32 = t.astype(np.int32)
+                dl32 = dl.astype(np.int32)
+                sign_i = int(r.term_sign)
+                idf_f = float(r.idf)
+                for lo, hi in zip(starts, ends):
+                    emit(base + int(gs[lo]), sign_i, idf_f, True,
+                         d[lo:hi].tobytes(), t32[lo:hi].tobytes(),
+                         dl32[lo:hi].tobytes(),
+                         int(t32[lo:hi].max()), int(dl32[lo:hi].min()))
+            yield pd.DataFrame(out)
 
-        # pre-partition by gshard at 2S so the score stage gets ~one group
-        # per task: the default shuffle.partitions hash-packs S groups into
-        # few partitions (collisions → idle cores + stragglers); the
-        # repartition satisfies the groupBy's clustering requirement, so no
-        # second shuffle is added
-        per_shard = routed.repartition(2 * S, F.col("gshard")).groupBy("gshard").applyInPandas(
-            score_fn, "query_id long, doc_id long, bm25 double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "bm25")
-        )
+    # split runs directly in the scan tasks: the postings table is 64
+    # bucket files that Spark bin-packs into ~defaultParallelism splits
+    # (maxSplitBytes = bytes/parallelism), and matched rows hash-spread
+    # across buckets, so decode/slice work distributes without a
+    # pre-shuffle. (A round-robin repartition here was measured as one
+    # full extra pass of the matched posting bytes through shuffle plus
+    # a stage barrier per batch — pure fixed cost.) A small scan can
+    # still collapse to 1-2 splits, but then the split work is small
+    # too; the heavy stage (score) is fanned by gshard regardless.
+    routed = joined.mapInPandas(split_fn, ROUTED)
+
+    kk = k
+    qb = spark.sparkContext.broadcast(params)
+
+    def score_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        avg_dl, qdict, use_matrix, k1, k2, b = qb.value[int(key[0]) // S]
+        # decode every routed slice ONCE; tf-part of BM25 and its upper
+        # bound are query-independent — computed per slice, reused by
+        # every query touching the term
+        termd: dict[int, list] = {}
+        for r in pdf.itertuples():
+            if r.raw:
+                d = np.frombuffer(r.doc_bytes, dtype=np.int64)
+                t = np.frombuffer(r.tf_bytes, dtype=np.int32).astype(np.int64)
+                dl = np.frombuffer(r.dl_bytes, dtype=np.int32).astype(np.int64)
+            else:
+                d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
+            if d.size == 0:
+                continue
+            kd = k1 * (1 - b + b * dl / avg_dl)
+            tfpart = t * (k1 + 1) / (t + kd)
+            mtf = float(r.max_tf)
+            ub_tf = mtf * (k1 + 1) / (mtf + k1 * (1 - b + b * float(r.min_dl) / avg_dl))
+            termd.setdefault(int(r.term_sign), []).append(
+                (d, tfpart, ub_tf, float(r.idf))
+            )
+        if use_matrix:
+            out = _score_batch_matrix(termd, qdict, k1, k2, kk)
+        else:
+            out = _score_batch_taat(termd, qdict, k2, kk)
+        if out is None:
+            return pd.DataFrame({"query_id": [], "doc_id": [], "bm25": []}).astype(
+                {"query_id": "int64", "doc_id": "int64", "bm25": "float64"}
+            )
+        q, d, s = out
+        return pd.DataFrame({"query_id": q, "doc_id": d, "bm25": s})
+
+    # pre-partition by gshard at 2 per group so the score stage gets ~one
+    # group per task: the default shuffle.partitions hash-packs the
+    # groups into few partitions (collisions → idle cores + stragglers);
+    # the repartition satisfies the groupBy's clustering requirement, so
+    # no second shuffle is added
+    per_shard = routed.repartition(2 * S * len(scans), F.col("gshard")).groupBy(
+        "gshard"
+    ).applyInPandas(score_fn, "query_id long, doc_id long, bm25 double")
+    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
+    return (
+        per_shard.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "bm25")
+    )
 
 
 def _score_batch_taat(termd: dict, qdict: dict, k2: float, kk: int):
@@ -926,8 +962,9 @@ def _query_term_census(
     queries: list[tuple[int, str]],
 ) -> tuple[dict[int, set[int]], dict[int, int]]:
     """Shared certificate input for tiered_wand_topk and choose_prune_m:
-    (signs_by_q, df_map) — per-qid matched-term signs (last text wins
-    for a duplicated qid, matching how serving routes) and the FULL
+    (signs_by_q, df_map) — per-qid matched-term signs (for a duplicated
+    qid the last text with terms wins, as in the WAND query dict, so the
+    certificate covers the text that is scored) and the FULL
     store df of every batch term via ONE bucket-pruned term_stats
     lookup. Keeping both consumers on one helper keeps the m the sizer
     picks aligned with the certificate serving actually applies."""
@@ -936,13 +973,14 @@ def _query_term_census(
     all_signs: set[int] = set()
     for qid, q in queries:
         _, _, tmap = tokenize_with_stats(q, mode)
-        signs_by_q[qid] = set(tmap.keys())
+        if tmap or qid not in signs_by_q:
+            signs_by_q[qid] = set(tmap.keys())
         all_signs.update(tmap.keys())
     df_map: dict[int, int] = {}
     if all_signs:
         df_map = {
             r["term_sign"]: r["df"]
-            for r in store.term_stats(spark)
+            for r in store.opened(spark, "term_stats")
             .filter(_in_expr("term_sign", sorted(all_signs)))
             .select("term_sign", "df")
             .collect()
@@ -1002,17 +1040,21 @@ def tiered_wand_topk(
     WAND. Those queries scan the compacted postings only (measured 3.5×
     qps at 1M docs / m=2000); queries with a hot term fall back to the
     full store. Output is therefore always exact full BM25, with a
-    ``tier1`` flag per row.
+    ``tier1`` flag per row. A duplicated qid is routed by its last text
+    with terms, the text WAND scores.
 
     Scale shape: the certificate costs one term_stats lookup bounded by
     the query batch's unique terms (bucket-pruned scan, driver gets one
-    (sign, df) row per query term); both tiers then run the ordinary
-    batched WAND dataflow — posting bytes shuffle once per doc group
-    per tier, the broadcast query dicts split by tier."""
+    (sign, df) row per query term); then both tiers run as ONE
+    ``_wand_plan`` — each tier's postings scan in its own doc-group
+    range, one score stage, one top-k merge. The doc-group fan is sized
+    to the batch: Σ df of its terms over POSTINGS_PER_DOC_GROUP (see
+    ``_batch_fan``), unless ``cfg.query_doc_fan`` sets it."""
     import json as _json
     import os as _os
 
-    k = k or (cfg.k if cfg else None) or QueryConfig().k
+    cfg = cfg or QueryConfig()
+    k = k or cfg.k
     lin = _os.path.join(pruned_store.lineage_path, "doc_term.json")
     with open(lin) as fh:
         j = _json.load(fh)
@@ -1022,31 +1064,14 @@ def tiered_wand_topk(
             f"{pruned_store.root} is not a prune_store output "
             "(no prune_m in doc_term lineage)"
         )
-    eng_full = QueryEngine(spark, full_store, cfg)
-    eng_pruned = QueryEngine(spark, pruned_store, cfg)
     signs_by_q, df_map = _query_term_census(spark, full_store, queries)
-    if not any(signs_by_q.values()):
-        empty = spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, bm25 double"
-        )
-        return empty.withColumn("tier1", F.lit(True))
-    tier1 = [
-        (qid, q)
-        for qid, q in queries
-        if all(df_map.get(s, 0) <= m for s in signs_by_q[qid])
-    ]
-    t1_ids = {qid for qid, _ in tier1}
+    t1_ids = {
+        qid for qid, signs in signs_by_q.items() if all(df_map.get(s, 0) <= m for s in signs)
+    }
+    tier1 = [(qid, q) for qid, q in queries if qid in t1_ids]
     rest = [(qid, q) for qid, q in queries if qid not in t1_ids]
-    parts = []
-    if tier1:
-        parts.append(
-            eng_pruned.wand_topk(tier1, k=k).withColumn("tier1", F.lit(True))
-        )
-    if rest:
-        parts.append(
-            eng_full.wand_topk(rest, k=k).withColumn("tier1", F.lit(False))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    fan = cfg.query_doc_fan or _batch_fan(spark, sum(df_map.values()))
+    tiers = [(QueryEngine(spark, pruned_store, cfg), tier1),
+             (QueryEngine(spark, full_store, cfg), rest)]
+    flag = _in_expr("query_id", sorted(t1_ids)) if t1_ids else F.lit(False)
+    return _wand_plan(spark, tiers, k, fan).withColumn("tier1", flag)
