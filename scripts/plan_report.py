@@ -1,8 +1,8 @@
 """Generate PLANS.md: a physical-plan census of every driver query.
 
 For each __spark_entry__.queries() entry, compile the plan at sf0.001 and
-record the scale-relevant shape: number of Exchanges (shuffles), whether
-any Python eval (Arrow/batch UDF) appears, whether small sides broadcast,
+record the scale-relevant shape: number of Exchanges (shuffles), number
+of Python-eval nodes (Arrow/batch UDF stages), whether small sides broadcast,
 and whether the parquet scan shows pushed filters / pruned columns. This
 is the honest "would this survive 100x" audit, regenerated per round.
 
@@ -13,11 +13,19 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tiny_search_engine_spark.session import get_spark  # noqa: E402
+
+# a physical-plan node that runs Python: MapInPandas, FlatMapGroupsInPandas,
+# ArrowEvalPython/BatchEvalPython and the other *InPandas/*InArrow operators;
+# matched at the start of a plan-tree line so expression text never counts
+PY_NODE = re.compile(
+    r"^[ :|+\-]*(?:\*\(\d+\) )?(\w+InPandas|\w+InArrow|\w*EvalPython)\b", re.M
+)
 
 
 def main() -> None:
@@ -37,7 +45,7 @@ def main() -> None:
                 (
                     name,
                     plan.count("Exchange"),
-                    "yes" if ("EvalPython" in plan or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan) else "no",
+                    len(PY_NODE.findall(plan)),
                     "yes" if "Broadcast" in plan else "no",
                     "yes" if "PushedFilters: [" in plan and "PushedFilters: []" not in plan else "no",
                 )
@@ -50,18 +58,19 @@ def main() -> None:
         "",
         f"Generated by `python scripts/plan_report.py {sf_dir}`. Exchanges",
         "count shuffle boundaries in the compiled plan (AQE stages included);",
-        "py-eval marks any Python/Arrow evaluation (the hot-path rule is:",
-        "only where Spark has no builtin — unicode normalization, feature",
-        "DP kernels, stateful streaming); broadcast marks at least one",
-        "broadcast exchange/join (small sides must broadcast); pushdown",
-        "marks a parquet scan with non-empty PushedFilters.",
+        "py-eval counts the plan's Python/Arrow evaluation nodes (each one a",
+        "Python stage; the hot-path rule is: only where Spark has no builtin —",
+        "unicode normalization, feature DP kernels, stateful streaming);",
+        "broadcast marks at least one broadcast exchange/join (small sides",
+        "must broadcast); pushdown marks a parquet scan with non-empty",
+        "PushedFilters.",
         "",
         "| query | exchanges | py-eval | broadcast | pushdown |",
         "|---|---|---|---|---|",
     ]
     for name, ex, py, bc, pd in rows:
         out.append(f"| {name} | {ex} | {py} | {bc} | {pd} |")
-    n_py = sum(1 for r in rows if r[2] == "yes")
+    n_py = sum(1 for r in rows if isinstance(r[2], int) and r[2] > 0)
     out += [
         "",
         f"{len(rows)} queries; {n_py} touch Python eval.",

@@ -113,11 +113,15 @@ def test_wand_exact_across_heterogeneous_shard_counts(spark, tiny_store, tiny_go
 def test_wand_batch_scorers_equal_golden(spark, tiny_store, tiny_golden, mode):
     """Both batch scorers (exhaustive sparse-product and pruned TAAT) are
     exact: rank-identical to the golden exhaustive scorer, at several
-    doc-group fan values (pass-through, split, and mixed routing). The
-    kernel follows the batch size: QUERIES alone stays under
-    MATRIX_SCORE_MIN_QUERIES (TAAT); QUERIES plus the same texts under
-    fresh qids reaches it (matrix)."""
-    from tiny_search_engine_spark.query import MATRIX_SCORE_MIN_QUERIES
+    doc-group fan values: 1 (every posting row nests in one group), 2
+    (the batch's one-shard rows are replicated and masked, its two-shard
+    rows nest), 4 and 16 (every row is replicated and masked). The kernel follows
+    the batch size: QUERIES alone stays under MATRIX_SCORE_MIN_QUERIES
+    (TAAT); QUERIES plus the same texts under fresh qids reaches it
+    (matrix)."""
+    from pyspark.sql import functions as F
+
+    from tiny_search_engine_spark.query import MATRIX_SCORE_MIN_QUERIES, _in_expr
     from tiny_search_engine_spark.tokenizer import tokenize_with_stats
 
     shift = 1000
@@ -126,9 +130,18 @@ def test_wand_batch_scorers_equal_golden(spark, tiny_store, tiny_golden, mode):
         batch += [(qid + shift, q) for qid, q in QUERIES]
     non_empty = sum(1 for _, q in batch if tokenize_with_stats(q, "code")[2])
     assert (non_empty >= MATRIX_SCORE_MIN_QUERIES) == (mode == "matrix")
+    signs = sorted({s for _, q in batch for s in tokenize_with_stats(q, "code")[2]})
+    n_shards = {
+        r["n_shards"]
+        for r in tiny_store.postings(spark)
+        .filter(_in_expr("term_sign", signs))
+        .select(F.col("n_shards")).distinct().collect()
+    }
+    # both routes run: fan 2 has matched rows on either side, fan 16 none nests
+    assert min(n_shards) < 2 <= max(n_shards) < 16, n_shards
     cfg = QueryConfig(profile="standard", compat="fixed")
     want = _golden_topk(tiny_golden, cfg)
-    for fan in (1, 4, 16):
+    for fan in (1, 2, 4, 16):
         eng = QueryEngine(
             spark, tiny_store,
             QueryConfig(profile="standard", compat="fixed", query_doc_fan=fan),

@@ -957,8 +957,8 @@ def test_tiered_wand_topk_store_level(spark, tiered_stores):
 
 
 def test_batch_fan_follows_posting_volume(spark):
-    """tiered_wand_topk's fan: one doc group per POSTINGS_PER_DOC_GROUP
-    postings of the batch's terms, pow2, capped at the session fan."""
+    """The WAND fan: one doc group per POSTINGS_PER_DOC_GROUP postings of
+    the batch's terms, pow2, capped at the session fan."""
     from tiny_search_engine_spark.query import (
         POSTINGS_PER_DOC_GROUP as C,
         _batch_fan,
@@ -969,6 +969,102 @@ def test_batch_fan_follows_posting_volume(spark):
     assert [_batch_fan(spark, n) for n in (0, 1, C)] == [1, 1, 1]
     assert [_batch_fan(spark, n) for n in (C + 1, 2 * C, 2 * C + 1)] == [2, 2, 4]
     assert _batch_fan(spark, 1000 * C) == cap == 8  # local[4]
+
+
+def _score_stage_tasks(sc, group: str) -> list[int]:
+    """Tasks of each WAND score stage a job group ran: the second stage of
+    every multi-stage job (postings scan and route, per-group score, then
+    the top-k window unless the fan is 1; a job's stage ids follow its
+    plan order). The census lookup is a one-stage job and does not count."""
+    st = sc.statusTracker()
+    out = []
+    for j in sorted(st.getJobIdsForGroup(group)):
+        stages = sorted(st.getJobInfo(j).stageIds)
+        if len(stages) > 1:
+            out.append(st.getStageInfo(stages[1]).numTasks)
+    return out
+
+
+def test_wand_topk_fan_follows_batch(spark, tiny_store, monkeypatch):
+    """wand_topk sizes its doc-group fan to the batch, as tiered does: a
+    batch whose Σ df is under POSTINGS_PER_DOC_GROUP scores in one doc
+    group (two score tasks: the repartition runs two per group), a batch
+    over it in more. A batch without terms returns no rows and submits
+    no Spark job; a batch of absent terms returns no rows."""
+    from tiny_search_engine_spark import query
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import (
+        QueryEngine,
+        _batch_fan,
+        _query_term_census,
+        _query_terms,
+    )
+    from tiny_search_engine_spark.synth import make_queries
+
+    eng = QueryEngine(spark, tiny_store, QueryConfig(profile="standard", compat="fixed"))
+    big = list(enumerate(make_queries(30, seed=42)))
+    sigma = sum(_query_term_census(spark, tiny_store, _query_terms(big, "code")).values())
+    rare = (
+        tiny_store.term_stats(spark).filter(F.col("df") >= 2)
+        .orderBy("df", "term").first()
+    )
+    monkeypatch.setattr(query, "POSTINGS_PER_DOC_GROUP", sigma // 4)
+    assert rare["df"] <= sigma // 4 < sigma
+    sc = spark.sparkContext
+
+    def run(name, batch):
+        sc.setJobGroup(name, name)
+        try:
+            rows = eng.wand_topk(batch, k=5).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return rows, sc.statusTracker().getJobIdsForGroup(name)
+
+    rows, _ = run("fan-small", [(0, rare["term"])])
+    assert len(rows) == min(5, rare["df"])
+    assert _score_stage_tasks(sc, "fan-small") == [2]
+    rows, _ = run("fan-big", big)
+    assert rows
+    assert _batch_fan(spark, sigma) > 1
+    assert _score_stage_tasks(sc, "fan-big") == [2 * _batch_fan(spark, sigma)]
+    for name, batch in (("fan-empty", []), ("fan-blank", [(0, ""), (1, "   ")])):
+        rows, jobs = run(name, batch)
+        assert rows == [] and list(jobs) == [], name
+    rows, _ = run("fan-absent", [(0, "zzqx_absent_term"), (1, "qqzx")])
+    assert rows == []
+
+
+def test_wand_topk_replicated_rows_equal_exact(spark, tiered_stores):
+    """On a store built with the default postings_per_shard every posting
+    row is one shard, so at query_doc_fan=8 each row is replicated to all
+    eight doc groups and masked to each group's docs: wand_topk still
+    equals bm25_topk row for row (ties within tolerance) and equals its
+    own fan-1 rows exactly."""
+    from helpers import assert_ranked_equal
+
+    from tiny_search_engine_spark.config import QueryConfig
+    from tiny_search_engine_spark.query import QueryEngine
+
+    full, _, m, dfs = tiered_stores
+    shards = full.postings(spark).select("n_shards").distinct().collect()
+    assert {r["n_shards"] for r in shards} == {1}
+    queries = _tiered_batches(dfs, m)["mixed"]
+
+    def engine(fan):
+        return QueryEngine(spark, full, QueryConfig(
+            profile="standard", compat="fixed", query_doc_fan=fan))
+
+    got = engine(8).wand_topk(queries, k=10).collect()
+    assert _rows_by_rank(got) == _rows_by_rank(engine(1).wand_topk(queries, k=10).collect())
+    want = engine(None).bm25_topk(queries, k=10).collect()
+    assert {(r["query_id"], r["rank"]) for r in got} == {(r["query_id"], r["rank"]) for r in want}
+    by_q = {}
+    for side, rows in (("got", got), ("want", want)):
+        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+            by_q.setdefault((side, r["query_id"]), []).append((r["doc_id"], r["bm25"]))
+    for qid, _ in queries:
+        assert_ranked_equal(by_q.get(("got", qid), []), by_q.get(("want", qid), []), ctx=f"q{qid}")
 
 
 @pytest.mark.parametrize("fan", [1, 2, 8, None])

@@ -118,10 +118,9 @@ class QueryConfig:
     # local[8]). Build jobs re-enable AQE (build_index) — coalescing and
     # skew-join belts matter there. None = leave the session alone.
     disable_aqe: bool | None = True
-    # WAND batch doc-group fan (pow2). Posting slices are routed/split to
-    # this many doc-range groups and each group scores the whole query
-    # batch (query.py _wand_plan). None → wand_topk: ~2× defaultParallelism
-    # (query._session_fan); tiered_wand_topk: sized to the batch, one group
-    # per POSTINGS_PER_DOC_GROUP of its terms' Σ df, pow2, capped at the
-    # same (query._batch_fan).
+    # WAND batch doc-group fan (pow2). Posting rows are routed to this many
+    # doc-range groups and each group scores the whole query batch
+    # (query.py _wand_plan). None → sized to the batch, for wand_topk and
+    # tiered_wand_topk alike: one group per POSTINGS_PER_DOC_GROUP of its
+    # terms' Σ df, pow2, capped at ~2× defaultParallelism (query._batch_fan).
     query_doc_fan: int | None = None

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .build import POSTING_BUCKETS, SegmentStore
-from .compress import decode_posting, range_shard
+from .compress import decode_doc_ids, range_shard, varbyte_decode
 from .config import BM25_PROFILES, QueryConfig
 from .hashing import term_sign
 from .tokenizer import text_len, tokenize_with_stats
@@ -50,13 +50,13 @@ from .tokenizer import text_len, tokenize_with_stats
 # block-max-pruned term-at-a-time (_score_batch_taat). Both are exact.
 MATRIX_SCORE_MIN_QUERIES = 32
 
-# tiered_wand_topk's doc-group fan: one group per this many postings of
-# the batch's terms (Σ df), pow2, capped at wand_topk's session fan. A
-# group is one Python score task, whose fixed cost outweighs what a split
-# saves below about this many postings. Measured on 4 cores: up to Σ df
-# 65k one or two groups cost the least CPU at the same wall time, four
-# and eight up to twice as much; at 160-169k two groups were best; at
-# 416k four cut wall time by 17% for 10% more CPU.
+# The WAND doc-group fan (wand_topk and tiered_wand_topk): one group per
+# this many postings of the batch's terms (Σ df), pow2, capped at the
+# session fan. A group is one Python score task, whose fixed cost
+# outweighs what a split saves below about this many postings. Measured
+# on 4 cores: up to Σ df 65k one or two groups cost the least CPU at the
+# same wall time, four and eight up to twice as much; at 160-169k two
+# groups were best; at 416k four cut wall time by 17% for 10% more CPU.
 POSTINGS_PER_DOC_GROUP = 131072
 
 
@@ -533,11 +533,16 @@ class QueryEngine:
 
         The one-tier call of ``_wand_plan``, the batched doc-group
         dataflow that tiered_wand_topk runs over both of its stores in one
-        plan. The fan is ``query_doc_fan``, else the session's
-        (``_session_fan``, ~2× defaultParallelism), whatever the batch."""
+        plan. The fan is ``query_doc_fan``, else sized to the batch by
+        ``_batch_fan`` from Σ df of its terms (one ``_query_term_census``
+        lookup; a batch without terms runs no job at all)."""
         k = k or self.cfg.k
-        fan = self.cfg.query_doc_fan or _session_fan(self.spark)
-        return _wand_plan(self.spark, [(self, queries)], k, fan)
+        qterms = _query_terms(queries, self.mode)
+        fan = self.cfg.query_doc_fan
+        if fan is None:
+            dfs = _query_term_census(self.spark, self.store, qterms)
+            fan = _batch_fan(self.spark, sum(dfs.values()))
+        return _wand_plan(self.spark, [(self, qterms)], k, fan)
 
 
 def _session_fan(spark: SparkSession) -> int:
@@ -557,46 +562,39 @@ def _batch_fan(spark: SparkSession, n_postings: int) -> int:
 
 def _wand_plan(
     spark: SparkSession,
-    tiers: list[tuple[QueryEngine, list[tuple[int, str]]]],
+    tiers: list[tuple[QueryEngine, dict[int, list[tuple[int, int]]]]],
     k: int,
     S: int,
 ) -> DataFrame:
-    """Batched doc-group WAND over one or more (engine, queries) tiers,
-    as ONE plan: (query_id, rank, doc_id, bm25). A query_id must appear
-    in one tier only.
+    """Batched doc-group WAND over one or more (engine, query terms)
+    tiers, as ONE plan: (query_id, rank, doc_id, bm25). Query terms are
+    ``_query_terms`` dicts; a query_id must appear in one tier only.
 
     Posting bytes are shuffled ONCE per doc group — never per query — so
-    shuffle volume equals the pruned index-slice size, independent of
-    batch size (the 100 TB design).
+    shuffle volume is the pruned index slice (a coarse row once per group
+    it covers), independent of batch size (the 100 TB design).
 
     1. per tier, a bucket-pruned scan of its store's postings (term_sign
-       IN pushed to parquet) ⋈ broadcast idf for pre-v2 stores, tagged
-       with the tier; the tiers' scans are unioned.
-    2. route/split (narrow ``mapInPandas``) into S doc groups per tier,
-       gshard = tier·S + g. A posting row with m doc-RANGE shards
-       (build.py job_postings) nests inside one fine group when m ≥ S
-       (g = shard·S/m, zero-copy pass-through); when m < S it is decoded
-       once and SLICED at the group boundaries (range_shard is monotone
-       in the sorted doc order → searchsorted), each slice shipped as
-       raw fixed-width arrays — entry-exact routing, no replication.
-    3. per-gshard ``applyInPandas``: decode each routed slice once, then
-       score ALL of the tier's queries against the group's term arrays,
-       with one broadcast of per-tier (avg_dl, query dict, scorer, BM25
-       constants); emit per-query group-local top-k.
+       IN pushed to parquet) ⋈ broadcast idf for pre-v2 stores; the
+       tiers' scans are unioned.
+    2. route in the JVM (a projection, no Python stage) into S doc groups
+       per tier, gshard = tier·S + g. A posting row with m doc-RANGE
+       shards (build.py job_postings) goes to every group its shard
+       covers: one group, shard·S/m, when m ≥ S (the shard nests in it);
+       the S/m groups from shard·S/m up when m < S (replicated). The
+       row's WAND bounds are the max of its block_max_tf and the min of
+       its block_min_dl.
+    3. per-gshard ``applyInPandas``: decode each routed row once, mask a
+       replicated row to the group's own docs (range_shard is the build's
+       shard function at granularity S), then score ALL of the tier's
+       queries against the group's term arrays, with one broadcast of
+       per-tier (avg_dl, query dict, scorer, BM25 constants); emit
+       per-query group-local top-k, ranked.
     4. one global window merge. Each doc lives in exactly one group of
-       its tier, so per-group top-k → global top-k is exact."""
+       its tier, so per-group top-k → global top-k is exact. At S = 1 a
+       query's rows all come from one group and the merge is skipped."""
     params, scans = [], []
-    for t, (eng, queries) in enumerate(tiers):
-        # no weight fill: the WAND path needs only (sign, tf_q) per unique
-        # query term — query prep is pure driver-side tokenization, zero
-        # Spark jobs and no QueryInfo/synonym assembly. term_map keys are
-        # in first-occurrence order and carry tf, which is exactly the
-        # dup-skip + tf lookup the full path derives per occurrence.
-        qdict: dict[int, list[tuple[int, int]]] = {}
-        for qid, q in queries:
-            _, _, tmap = tokenize_with_stats(q, eng.mode)
-            if tmap:  # a later text of a qid replaces an earlier one
-                qdict[qid] = [(s, ent[0]) for s, ent in tmap.items()]
+    for t, (eng, qdict) in enumerate(tiers):
         prof = BM25_PROFILES[eng.cfg.profile]
         params.append((eng.avg_doc_len, qdict, len(qdict) >= MATRIX_SCORE_MIN_QUERIES,
                        prof.k1, prof.k2, prof.b))
@@ -618,100 +616,45 @@ def _wand_plan(
                 _in_expr("term_sign", signs)
             )
             post = post.join(F.broadcast(ts), "term_sign")
+        # [lo, hi]: the tier's groups this row's shard covers. n_shards and
+        # S are powers of two, so a shard either nests in one group or
+        # covers S / n_shards whole groups
+        lo = f"cast({t * S} + shard * {S} div n_shards as int)"
+        hi = f"{lo} + cast(greatest({S} div n_shards, 1) as int) - 1"
         scans.append(post.select(
-            F.lit(t).alias("tier"), "term_sign", "shard", "n_shards", "idf",
-            "doc_bytes", "tf_bytes", "dl_bytes", "block_max_tf", "block_min_dl",
+            F.expr(f"explode(sequence({lo}, {hi}))").alias("gshard"),
+            "term_sign", "n_shards", "idf", "doc_bytes", "tf_bytes", "dl_bytes",
+            F.array_max("block_max_tf").alias("max_tf"),
+            F.array_min("block_min_dl").alias("min_dl"),
         ))
-    if not scans:
+    if not scans:  # limit(0) plans as an empty local relation: no job
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, bm25 double"
-        )
-    joined = scans[0]
+        ).limit(0)
+    routed = scans[0]
     for p in scans[1:]:
-        joined = joined.union(p)
-
-    ROUTED = (
-        "gshard int, term_sign long, idf double, raw boolean, "
-        "doc_bytes binary, tf_bytes binary, dl_bytes binary, "
-        "max_tf int, min_dl int"
-    )
-
-    def split_fn(batches):
-        for pdf in batches:
-            out = {c: [] for c in (
-                "gshard", "term_sign", "idf", "raw", "doc_bytes",
-                "tf_bytes", "dl_bytes", "max_tf", "min_dl")}
-
-            def emit(g, sign, idf, raw, db, tb, lb, mtf, mdl):
-                out["gshard"].append(g)
-                out["term_sign"].append(sign)
-                out["idf"].append(idf)
-                out["raw"].append(raw)
-                out["doc_bytes"].append(db)
-                out["tf_bytes"].append(tb)
-                out["dl_bytes"].append(lb)
-                out["max_tf"].append(mtf)
-                out["min_dl"].append(mdl)
-
-            for r in pdf.itertuples():
-                base = int(r.tier) * S  # the tier's own gshard range
-                m = int(r.n_shards)
-                if m >= S:
-                    # this shard's doc range nests inside one fine
-                    # group: varbyte bytes pass through zero-copy
-                    emit(base + int(r.shard) * S // m, int(r.term_sign),
-                         float(r.idf), False, r.doc_bytes, r.tf_bytes,
-                         r.dl_bytes, int(max(r.block_max_tf)),
-                         int(min(r.block_min_dl)))
-                    continue
-                d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
-                gs = range_shard(d, S)  # nondecreasing (docs sorted)
-                cuts = np.flatnonzero(np.diff(gs)) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [d.size]))
-                # sliced rows ship RAW fixed-width bytes (int64 docs,
-                # int32 tf/dl): ~16 B/entry vs varbyte's ~10 B, but no
-                # per-slice varbyte encode (3 call-heavy encodes ×
-                # O(rows·S) slices dominated this stage) and frombuffer
-                # decode at the scorer is free
-                t32 = t.astype(np.int32)
-                dl32 = dl.astype(np.int32)
-                sign_i = int(r.term_sign)
-                idf_f = float(r.idf)
-                for lo, hi in zip(starts, ends):
-                    emit(base + int(gs[lo]), sign_i, idf_f, True,
-                         d[lo:hi].tobytes(), t32[lo:hi].tobytes(),
-                         dl32[lo:hi].tobytes(),
-                         int(t32[lo:hi].max()), int(dl32[lo:hi].min()))
-            yield pd.DataFrame(out)
-
-    # split runs directly in the scan tasks: the postings table is 64
-    # bucket files that Spark bin-packs into ~defaultParallelism splits
-    # (maxSplitBytes = bytes/parallelism), and matched rows hash-spread
-    # across buckets, so decode/slice work distributes without a
-    # pre-shuffle. (A round-robin repartition here was measured as one
-    # full extra pass of the matched posting bytes through shuffle plus
-    # a stage barrier per batch — pure fixed cost.) A small scan can
-    # still collapse to 1-2 splits, but then the split work is small
-    # too; the heavy stage (score) is fanned by gshard regardless.
-    routed = joined.mapInPandas(split_fn, ROUTED)
+        routed = routed.union(p)
 
     kk = k
     qb = spark.sparkContext.broadcast(params)
 
     def score_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        avg_dl, qdict, use_matrix, k1, k2, b = qb.value[int(key[0]) // S]
-        # decode every routed slice ONCE; tf-part of BM25 and its upper
-        # bound are query-independent — computed per slice, reused by
-        # every query touching the term
+        g = int(key[0])
+        avg_dl, qdict, use_matrix, k1, k2, b = qb.value[g // S]
+        # decode every routed row ONCE; tf-part of BM25 and its upper
+        # bound are query-independent — computed per row, reused by every
+        # query touching the term
         termd: dict[int, list] = {}
         for r in pdf.itertuples():
-            if r.raw:
-                d = np.frombuffer(r.doc_bytes, dtype=np.int64)
-                t = np.frombuffer(r.tf_bytes, dtype=np.int32).astype(np.int64)
-                dl = np.frombuffer(r.dl_bytes, dtype=np.int32).astype(np.int64)
-            else:
-                d, t, dl = decode_posting(r.doc_bytes, r.tf_bytes, r.dl_bytes)
+            d = decode_doc_ids(r.doc_bytes)
+            mine = slice(None)
+            if r.n_shards < S:  # replicated row: keep this group's docs
+                mine = range_shard(d, S) == g % S
+                if not mine.any():  # skip the tf/dl decode too
+                    continue
+            d = d[mine]
+            t = varbyte_decode(r.tf_bytes).astype(np.int64)[mine]
+            dl = varbyte_decode(r.dl_bytes).astype(np.int64)[mine]
             if d.size == 0:
                 continue
             kd = k1 * (1 - b + b * dl / avg_dl)
@@ -726,11 +669,14 @@ def _wand_plan(
         else:
             out = _score_batch_taat(termd, qdict, k2, kk)
         if out is None:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "bm25": []}).astype(
-                {"query_id": "int64", "doc_id": "int64", "bm25": "float64"}
+            return pd.DataFrame({"query_id": [], "rank": [], "doc_id": [], "bm25": []}).astype(
+                {"query_id": "int64", "rank": "int32", "doc_id": "int64", "bm25": "float64"}
             )
         q, d, s = out
-        return pd.DataFrame({"query_id": q, "doc_id": d, "bm25": s})
+        # the scorers emit each query's rows together, best first
+        first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+        rank = np.arange(1, q.size + 1) - np.repeat(first, np.diff(np.r_[first, q.size]))
+        return pd.DataFrame({"query_id": q, "rank": rank.astype(np.int32), "doc_id": d, "bm25": s})
 
     # pre-partition by gshard at 2 per group so the score stage gets ~one
     # group per task: the default shuffle.partitions hash-packs the
@@ -739,7 +685,9 @@ def _wand_plan(
     # no second shuffle is added
     per_shard = routed.repartition(2 * S * len(scans), F.col("gshard")).groupBy(
         "gshard"
-    ).applyInPandas(score_fn, "query_id long, doc_id long, bm25 double")
+    ).applyInPandas(score_fn, "query_id long, rank int, doc_id long, bm25 double")
+    if S == 1:  # each query is scored in one group: its local top-k is final
+        return per_shard
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
         per_shard.withColumn("rank", F.row_number().over(w))
@@ -956,36 +904,41 @@ def assert_content_sha256(spark: SparkSession, store: SegmentStore, source_df: D
     ).count()
 
 
+def _query_terms(queries: list[tuple[int, str]], mode: str) -> dict[int, list[tuple[int, int]]]:
+    """The batch's query dict, from ONE tokenization of each text:
+    qid → (sign, tf_q) per unique term, in first-occurrence order (the
+    dup-skip + tf lookup the full path derives per occurrence). A later
+    text of a qid replaces an earlier one only when it has terms; qids
+    without terms are left out. No weight fill: the WAND path and the
+    census need no Spark job and no QueryInfo/synonym assembly here."""
+    qterms: dict[int, list[tuple[int, int]]] = {}
+    for qid, q in queries:
+        _, _, tmap = tokenize_with_stats(q, mode)
+        if tmap:
+            qterms[qid] = [(s, ent[0]) for s, ent in tmap.items()]
+    return qterms
+
+
 def _query_term_census(
     spark: SparkSession,
     store: SegmentStore,
-    queries: list[tuple[int, str]],
-) -> tuple[dict[int, set[int]], dict[int, int]]:
-    """Shared certificate input for tiered_wand_topk and choose_prune_m:
-    (signs_by_q, df_map) — per-qid matched-term signs (for a duplicated
-    qid the last text with terms wins, as in the WAND query dict, so the
-    certificate covers the text that is scored) and the FULL
-    store df of every batch term via ONE bucket-pruned term_stats
-    lookup. Keeping both consumers on one helper keeps the m the sizer
-    picks aligned with the certificate serving actually applies."""
-    mode = store.meta()["tokenizer"]
-    signs_by_q: dict[int, set[int]] = {}
-    all_signs: set[int] = set()
-    for qid, q in queries:
-        _, _, tmap = tokenize_with_stats(q, mode)
-        if tmap or qid not in signs_by_q:
-            signs_by_q[qid] = set(tmap.keys())
-        all_signs.update(tmap.keys())
-    df_map: dict[int, int] = {}
-    if all_signs:
-        df_map = {
-            r["term_sign"]: r["df"]
-            for r in store.opened(spark, "term_stats")
-            .filter(_in_expr("term_sign", sorted(all_signs)))
-            .select("term_sign", "df")
-            .collect()
-        }
-    return signs_by_q, df_map
+    qterms: dict[int, list[tuple[int, int]]],
+) -> dict[int, int]:
+    """FULL-store df of every term of a ``_query_terms`` dict via ONE
+    bucket-pruned term_stats lookup (no job for a dict without terms).
+    The input of the WAND fan and of the tier certificate that
+    tiered_wand_topk and choose_prune_m share, so the m the sizer picks
+    stays aligned with the certificate serving actually applies."""
+    signs = sorted({s for terms in qterms.values() for s, _ in terms})
+    if not signs:
+        return {}
+    return {
+        r["term_sign"]: r["df"]
+        for r in store.opened(spark, "term_stats")
+        .filter(_in_expr("term_sign", signs))
+        .select("term_sign", "df")
+        .collect()
+    }
 
 
 def choose_prune_m(
@@ -1011,10 +964,13 @@ def choose_prune_m(
         raise ValueError("empty query log")
     import math
 
-    signs_by_q, df_map = _query_term_census(spark, store, queries)
+    qterms = _query_terms(queries, store.meta()["tokenizer"])
+    df_map = _query_term_census(spark, store, qterms)
+    # a qid without terms is answered by either tier: max df 0
+    n_empty = len({qid for qid, _ in queries} - qterms.keys())
     maxdfs = sorted(
-        max((df_map.get(s, 0) for s in signs), default=0)
-        for signs in signs_by_q.values()
+        [max(df_map.get(s, 0) for s, _ in terms) for terms in qterms.values()]
+        + [0] * n_empty
     )
     need = math.ceil(target_tier1 * len(maxdfs))
     return max(int(maxdfs[need - 1]), 1)
@@ -1064,12 +1020,14 @@ def tiered_wand_topk(
             f"{pruned_store.root} is not a prune_store output "
             "(no prune_m in doc_term lineage)"
         )
-    signs_by_q, df_map = _query_term_census(spark, full_store, queries)
+    qterms = _query_terms(queries, full_store.meta()["tokenizer"])
+    df_map = _query_term_census(spark, full_store, qterms)
     t1_ids = {
-        qid for qid, signs in signs_by_q.items() if all(df_map.get(s, 0) <= m for s in signs)
+        qid for qid, terms in qterms.items()
+        if all(df_map.get(s, 0) <= m for s, _ in terms)
     }
-    tier1 = [(qid, q) for qid, q in queries if qid in t1_ids]
-    rest = [(qid, q) for qid, q in queries if qid not in t1_ids]
+    tier1 = {qid: terms for qid, terms in qterms.items() if qid in t1_ids}
+    rest = {qid: terms for qid, terms in qterms.items() if qid not in t1_ids}
     fan = cfg.query_doc_fan or _batch_fan(spark, sum(df_map.values()))
     tiers = [(QueryEngine(spark, pruned_store, cfg), tier1),
              (QueryEngine(spark, full_store, cfg), rest)]
